@@ -32,15 +32,19 @@ Architecture (why this is NOT the slow Python path):
   becomes ONE partition holding the whole bucket — the bucket layout
   guarantees every version of a key lives in a single bucket, so the
   latest-per-key fold is partition-local and needs no shuffle at all
-  (the native read pays one; see `table.py` read()'s MOR branch).
-- **Point lookups prune like the native path.**  When the pushed
-  filters pin EVERY key column to an equality, the planner computes the
-  key's hash bucket driver-side with the pure-Python Spark-compatible
-  xxhash64 (`lake/xxh64.py`, bit-equality asserted against the JVM) and
-  plans only that bucket's files; per-file bloom sidecars then reject
-  files that provably lack the key — the same bucket → stats → bloom
-  stack as `LakeTable.point_lookup()`, still with zero SparkSession use
-  at planning time.
+  (the native read pays one; see `table.py` read()'s MOR branch).  On
+  partial-image tables (`partial_updates`) the fold resolves per column,
+  with the same rules as the native read.
+- **Point lookups are one key-filtered read, shared with
+  `LakeTable.point_lookup()`.**  When every key column is pinned to one
+  value (pushed equalities here; the lookup key there, through
+  `LakeTableReader.lookup`), the planner hashes the key driver-side with
+  the writer's vectorised xxhash64 (`lake/xxh64_vec.py`) and plans only
+  that bucket's files, minus those whose key stats or bloom sidecars
+  prove the key absent.  The partition read then skips row groups whose
+  key min/max stats exclude the key and keeps only the key's rows before
+  equality deletes and the MOR fold run.  `point_lookup()` runs this
+  same planner and reader on the driver and starts no Spark job.
 - Deletion vectors (positional kills) and equality deletes (key+LSN
   kills) are applied inside the partition read, matching the native
   read semantics exactly (tests assert value equality against it).
@@ -102,7 +106,7 @@ from .table import (
     schema_from_json,
     schema_pnames,
 )
-from .xxh64 import pmod, xxhash64
+from .xxh64_vec import pmod_vec, xxhash64_arrow
 
 FORMAT_NAME = "laketable"
 CHANGE_TYPE_COL = "_change_type"
@@ -248,6 +252,9 @@ class ScanPartition(InputPartition):
     dv_files: list[str] = field(default_factory=list)  # abs sidecar paths
     # (abs key-file paths, delete LSN) per equality-delete entry in scope
     eq_entries: list[tuple[list[str], int]] = field(default_factory=list)
+    # key values (key-col order) when every key column is pinned to one
+    # value: the read keeps only that key's rows (null-safe equality)
+    key: list | None = None
 
 
 class LakeTableReader(DataSourceReader):
@@ -291,7 +298,7 @@ class LakeTableReader(DataSourceReader):
         # a 16x blowup in one Python worker task)
         self._pack_unknown_rows = max(1, self._pack_rows // 4)
         self._prune: dict[str, list] = {}
-        self._probe_cache: dict[int, tuple[int, ...]] = {}
+        self._key: list | None = None  # set by lookup()
         # logical → PHYSICAL column names (column mapping): data files,
         # stats keys, and eq-delete key files all live in physical space;
         # identity until a RENAME/DROP COLUMN has happened
@@ -342,67 +349,78 @@ class LakeTableReader(DataSourceReader):
             vals.append(p[0])
         return vals
 
-    def _bloom_reject(self, fobj: dict) -> bool:
-        """True when the file's bloom sidecar proves the point-lookup key
-        absent.  Missing/odd sidecars admit (sound default); probe hashes
-        are the same ``xxhash64(*keys, i)`` the writer used, computed
-        here in Python (xxh64.py) and cached per distinct k."""
-        bloom = fobj.get("bloom")
-        if not bloom:
-            return False
-        k = int(bloom["k"])
-        probes = self._probe_cache.get(k)
-        if probes is None:
-            probes = tuple(
-                xxhash64(
-                    [*self._probe_vals, i], [*self._probe_types, "integer"]
-                )
-                for i in range(k)
-            )
-            self._probe_cache[k] = probes
-        try:
-            with open(
-                os.path.join(self.root, fobj["path"] + ".bloom"), "rb"
-            ) as fh:
-                raw = fh.read()
-        except OSError:
-            return False
-        import struct as _struct
+    def lookup(self, key_values: dict[str, Any]):
+        """Driver-local point read: the live rows whose key columns equal
+        ``key_values`` null-safely, as one Arrow table in ``out_cols``
+        order.  Plans with ``partitions()`` and reads each partition with
+        the same Arrow reader Spark's workers run; no SparkSession."""
+        import pyarrow as pa
 
-        words = list(_struct.unpack(f"<{len(raw) // 8}q", raw))
-        return not LakeTable._bloom_contains(bloom, words, probes)
+        missing = [k for k in self.key_cols if k not in key_values]
+        if missing:
+            raise ValueError(f"point_lookup needs every key column: {missing}")
+        self._key = [key_values[k] for k in self.key_cols]
+        return pa.concat_tables(
+            [self._read_table(p) for p in self.partitions()]
+        )
+
+    def _key_arrays(self, point: list) -> list:
+        """One-row Arrow arrays of a key tuple in the key columns' types,
+        converted the way PySpark converts a Python value for the JVM."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        fields = [self.target[c] for c in self.key_cols]
+        out = []
+        for f, at, v in zip(
+            fields, to_arrow_schema(T.StructType(fields)).types, point
+        ):
+            iv = None if v is None else f.dataType.toInternal(v)
+            try:
+                out.append(pa.array([iv], type=at))
+            except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):
+                out.append(pa.array([iv]).cast(at))  # e.g. "5" for a long
+        return out
+
+    def _hash_key(self, keys: list) -> tuple[int | None, list | None]:
+        """(bucket, bloom probes) of one key tuple from the writer's
+        vectorised xxhash64: bucket ``pmod(xxhash64(*keys), n_buckets)``,
+        probe i ``xxhash64(*keys, i)``.  (None, None) for a key type the
+        kernel does not cover: every bucket is planned, no bloom rejects."""
+        import pyarrow as pa
+
+        types = [self.target[c].dataType.typeName() for c in self.key_cols]
+        k = LakeTable.BLOOM_K
+        try:
+            h = xxhash64_arrow(keys, types)
+            probes = xxhash64_arrow(
+                [a.take([0] * k) for a in keys]
+                + [pa.array(list(range(k)), pa.int32())],
+                [*types, "integer"],
+            )
+        except TypeError:
+            return None, None
+        bucket = int(pmod_vec(h, self.n_buckets)[0])
+        return bucket, [tuple(int(x) for x in probes)]
 
     def partitions(self):
         snap = self._snap
-        prune = self._prune or None
         parts: list[ScanPartition] = []
+        prune = dict(self._prune)
         dv_entries = snap.get("dv", [])
         eq_entries = snap.get("eqdel", [])
-        point = self._point_key()
-        pbucket: int | None = None
+        point = self._key if self._key is not None else self._point_key()
+        pbucket = probes = None
         if point is not None:
-            try:
-                types = [
-                    self.target[c].dataType.typeName() for c in self.key_cols
-                ]
-                pbucket = pmod(xxhash64(point, types), self.n_buckets)
-                self._probe_vals, self._probe_types = point, types
-            except TypeError:
-                pbucket = None  # un-hashable key type: no bucket pruning
+            # a None component (null key) admits every file's stats
+            prune.update({c: [v, v] for c, v in zip(self.key_cols, point)})
+            pbucket, probes = self._hash_key(self._key_arrays(point))
+        prune = prune or None
         for b, files in snap["buckets"].items():
             bi = int(b)
             if pbucket is not None and bi != pbucket:
                 continue  # keys never span buckets: O(1)-bucket lookup
             has_deltas = any(f.get("delta") for f in files)
-            if has_deltas and self.partial:
-                # NOT NotImplementedError: the datasource API treats that
-                # as "partitions() not overridden" and plans one default
-                # partition instead of failing
-                raise ValueError(
-                    "laketable: partial-image tables with pending MOR "
-                    "deltas need the per-column fold — compact() the "
-                    "table or use LakeTable.read()"
-                )
             eff = prune
             if prune and has_deltas:
                 # non-key columns can change between base row and delta
@@ -436,123 +454,117 @@ class LakeTableReader(DataSourceReader):
                 )
                 for f in files
                 if (eff is None or LakeTable._stats_admit(f, eff))
-                and not (pbucket is not None and self._bloom_reject(f))
+                and not LakeTable._bloom_reject(self.root, f, probes)
             ]
             if not admitted:
                 continue
-            if has_deltas:
-                # keys never span buckets: the fold is partition-local
+            # keys never span buckets: the fold is partition-local, so a
+            # bucket with deltas is one partition
+            rows_of = {f["path"]: f.get("rows") for f in files}
+            for chunk in (
+                [admitted] if has_deltas else self._pack(admitted, rows_of)
+            ):
                 parts.append(
-                    ScanPartition(admitted, fold=True, dv_files=dvf,
-                                  eq_entries=eqs)
-                )
-            else:
-                rows_of = {
-                    f["path"]: f.get("rows") for f in files
-                }
-                budget = self._pack_rows
-                chunk: list = []
-                chunk_rows = 0
-                for fe in admitted:
-                    # unknown/zero row count -> charge budget/4 (see
-                    # _pack_unknown_rows): packs stats-less manifests
-                    # while bounding per-task overshoot to 4x
-                    r = rows_of.get(fe[1]) or self._pack_unknown_rows
-                    if budget and chunk and chunk_rows + r > budget:
-                        parts.append(
-                            ScanPartition(
-                                chunk,
-                                dv_files=dvf
-                                if any(c[3] for c in chunk) else [],
-                                eq_entries=eqs,
-                            )
-                        )
-                        chunk, chunk_rows = [], 0
-                    chunk.append(fe)
-                    chunk_rows += r
-                    if not budget:  # packing disabled: one file each
-                        parts.append(
-                            ScanPartition(
-                                chunk,
-                                dv_files=dvf if fe[3] else [],
-                                eq_entries=eqs,
-                            )
-                        )
-                        chunk, chunk_rows = [], 0
-                if chunk:
-                    parts.append(
-                        ScanPartition(
-                            chunk,
-                            dv_files=dvf
-                            if any(c[3] for c in chunk) else [],
-                            eq_entries=eqs,
-                        )
+                    ScanPartition(
+                        chunk,
+                        fold=has_deltas,
+                        dv_files=dvf if any(c[3] for c in chunk) else [],
+                        eq_entries=eqs,
+                        key=point,
                     )
+                )
         return parts or [ScanPartition([])]
+
+    def _pack(self, admitted: list, rows_of: dict):
+        """Consecutive runs of a delta-free bucket's files holding up to
+        ``target_partition_rows`` manifest rows each (one file per run
+        when 0)."""
+        budget = self._pack_rows
+        chunk: list = []
+        chunk_rows = 0
+        for fe in admitted:
+            # unknown/zero row count -> charge budget/4 (see
+            # _pack_unknown_rows): packs stats-less manifests while
+            # bounding per-task overshoot to 4x
+            r = rows_of.get(fe[1]) or self._pack_unknown_rows
+            if chunk and (not budget or chunk_rows + r > budget):
+                yield chunk
+                chunk, chunk_rows = [], 0
+            chunk.append(fe)
+            chunk_rows += r
+        if chunk:
+            yield chunk
 
     # -- execution (runs on executors; Arrow end-to-end) ---------------- #
     def read(self, partition: ScanPartition):
+        for batch in self._read_table(partition).to_batches():
+            if batch.num_rows:
+                yield batch
+
+    def _read_table(self, partition: ScanPartition):
+        """One partition as an Arrow table in ``out_cols`` order: the
+        file read (key filter and deletion vectors per row group), then
+        equality deletes, then the MOR fold."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out_schema = to_arrow_schema(self._struct(self.out_cols))
         if not partition.files:
-            return
-        need_internal = bool(
-            partition.fold or partition.eq_entries or self.with_lsn
-        )
+            return out_schema.empty_table()
         fold = partition.fold
+        eqs = partition.eq_entries
         internal = list(
             dict.fromkeys(
                 [
                     *self.out_cols,
-                    *(self.key_cols if (fold or partition.eq_entries) else []),
-                    *( [LSN_COL] if need_internal else [] ),
-                    *( [DELETED_COL] if fold else [] ),
+                    *(self.key_cols
+                      if (fold or eqs or partition.key is not None) else []),
+                    *([LSN_COL] if (fold or eqs or self.with_lsn) else []),
+                    *([DELETED_COL] if fold else []),
                 ]
             )
         )
         tbl = self._read_aligned(partition, internal)
-        if partition.eq_entries:
-            tbl = self._apply_eq_deletes(tbl, partition.eq_entries)
+        if eqs:
+            tbl = self._apply_eq_deletes(tbl, eqs)
         if fold:
             tbl = self._fold_latest(tbl)
-        out_struct = T.StructType(
-            [
-                next(f for f in self._internal_struct().fields if f.name == c)
-                for c in self.out_cols
-            ]
-        )
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out = tbl.select(self.out_cols).cast(to_arrow_schema(out_struct))
-        for batch in out.to_batches():
-            if batch.num_rows:
-                yield batch
+        return tbl.select(self.out_cols).cast(out_schema)
 
     # helpers ----------------------------------------------------------- #
-    def _internal_struct(self) -> T.StructType:
-        return T.StructType(
-            list(self.target.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType(), True),
-                T.StructField(DELETED_COL, T.BooleanType(), True),
-            ]
-        )
+    def _struct(self, names: list[str]) -> T.StructType:
+        """The named columns of the table schema plus (_lsn, _deleted)."""
+        by = {f.name: f for f in self.target.fields}
+        by[LSN_COL] = T.StructField(LSN_COL, T.LongType(), True)
+        by[DELETED_COL] = T.StructField(DELETED_COL, T.BooleanType(), True)
+        return T.StructType([by[n] for n in names])
 
     def _read_aligned(self, partition: ScanPartition, internal: list[str]):
-        """Read the partition's files column-pruned and align every file
-        to one Arrow schema (null-fill columns the file's schema version
-        predates — the Iceberg read-time projection)."""
+        """Read the partition's files column-pruned, one row group at a
+        time, and align every piece to one Arrow schema (null-fill
+        columns the file's schema version predates — the Iceberg
+        read-time projection).  With a partition key, a row group whose
+        key min/max stats exclude it is never read, and only the key's
+        rows of the others are kept; deletion-vector positions are masked
+        per row group from its first row's file offset.  A point read so
+        holds at most one row group of other keys' rows at a time."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        istruct = self._internal_struct()
-        arrow_schema = to_arrow_schema(
-            T.StructType([f for f in istruct.fields if f.name in internal])
-        )
+        arrow_schema = to_arrow_schema(self._struct(internal))
         dead = self._dv_positions(partition) if partition.dv_files else {}
         pm = self._pm
+        key = None
+        if partition.key is not None:
+            key = [
+                (pm.get(c, c), a, a[0].as_py())
+                for c, a in zip(self.key_cols, self._key_arrays(partition.key))
+            ]
         pieces = []
         for abs_path, rel_path, sid, has_dv in partition.files:
             pf = pq.ParquetFile(abs_path)
+            md = pf.metadata
             # the file's PHYSICAL columns (delta files carry _deleted,
             # base files don't; older schema ids lack evolved columns;
             # renamed columns keep their physical name)
@@ -562,23 +574,38 @@ class LakeTableReader(DataSourceReader):
                     pm.get(c, c) for c in internal if pm.get(c, c) in present
                 )
             )
-            t = pf.read(columns=cols)
-            if has_dv and rel_path in dead:
-                import numpy as np
-
-                mask = np.ones(t.num_rows, dtype=bool)
-                pos = dead[rel_path]
-                mask[pos[pos < t.num_rows]] = False
-                t = t.filter(pa.array(mask))
-            arrays = []
-            for fld in arrow_schema:
-                src = pm.get(fld.name, fld.name)
-                if src in t.column_names:
-                    arrays.append(t.column(src).cast(fld.type))
-                else:
-                    arrays.append(pa.nulls(t.num_rows, type=fld.type))
-            pieces.append(pa.table(arrays, schema=arrow_schema))
-        return pa.concat_tables(pieces) if len(pieces) > 1 else pieces[0]
+            pos = dead.get(rel_path) if has_dv else None
+            leaf = (
+                {pf.schema.column(j).path: j for j in range(md.num_columns)}
+                if key else {}
+            )
+            first = 0
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                start, first = first, first + rg.num_rows
+                if key and not all(
+                    _stats_hold(rg.column(leaf[p]).statistics, v)
+                    for p, _, v in key
+                    if p in leaf
+                ):
+                    continue
+                t = pf.read_row_group(i, columns=cols)
+                keep = np.ones(t.num_rows, dtype=bool)
+                if pos is not None:
+                    keep[pos[(pos >= start) & (pos < first)] - start] = False
+                if key:
+                    keep &= _key_mask(t, key)
+                if not keep.all():
+                    t = t.filter(pa.array(keep))
+                arrays = []
+                for fld in arrow_schema:
+                    src = pm.get(fld.name, fld.name)
+                    if src in t.column_names:
+                        arrays.append(t.column(src).cast(fld.type))
+                    else:
+                        arrays.append(pa.nulls(t.num_rows, type=fld.type))
+                pieces.append(pa.table(arrays, schema=arrow_schema))
+        return pa.concat_tables(pieces) if pieces else arrow_schema.empty_table()
 
     def _dv_positions(self, partition: ScanPartition):
         """rel_path -> sorted int64 array of dead row indices, from the
@@ -620,26 +647,131 @@ class LakeTableReader(DataSourceReader):
             .groupby(self.key_cols, dropna=False, as_index=False)["_eq_lsn"]
             .max()
         )
-        df = tbl.to_pandas()
-        m = df.merge(kdf, on=self.key_cols, how="left")
-        keep = ~(m["_eq_lsn"].notna() & (m[LSN_COL] <= m["_eq_lsn"]))
-        return pa.Table.from_pandas(
-            df[keep.to_numpy()], schema=tbl.schema, preserve_index=False
+        # only the key and LSN columns cross to pandas: the kill mask
+        # filters the Arrow table, whose types stay exact
+        m = (
+            tbl.select([*self.key_cols, LSN_COL])
+            .to_pandas()
+            .merge(kdf, on=self.key_cols, how="left")
         )
+        dead = m["_eq_lsn"].notna() & (m[LSN_COL] <= m["_eq_lsn"])
+        return tbl.filter(pa.array(~dead.to_numpy(dtype=bool)))
 
     def _fold_latest(self, tbl):
-        """MOR resolution, partition-local (bucket-local): latest LSN per
-        key wins, tombstones drop the key."""
-        import pandas as pd  # noqa: F401
+        """MOR resolution, bucket-local.  One sort on (keys, LSN) lines
+        up every key's versions; a full-image table keeps each key's
+        latest version unless it is a tombstone.  A partial-image table
+        (``partial_updates``: a null delta column means "unchanged")
+        resolves per column, as ``LakeTable.read`` does: the key's latest
+        tombstone LSN is the inheritance barrier, each non-key column
+        takes its latest non-null live value above it, the LSN is the
+        key's latest, and a key with no live version above the barrier
+        is gone."""
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        df = tbl.to_pandas()
-        idx = df.groupby(self.key_cols, dropna=False)[LSN_COL].idxmax()
-        df = df.loc[idx]
-        dele = df[DELETED_COL].fillna(False).astype(bool)
-        df = df[~dele.to_numpy()]
-        return pa.Table.from_pandas(df, schema=tbl.schema,
-                                    preserve_index=False)
+        n = tbl.num_rows
+        if not n:
+            return tbl
+        keys = self.key_cols
+        tbl = tbl.take(
+            pc.sort_indices(
+                tbl,
+                sort_keys=[(k, "ascending") for k in [*keys, LSN_COL]],
+                null_placement="at_start",
+            )
+        )
+        # new[i]: row i starts another key (null-safe and NaN-safe, the
+        # way Spark groups)
+        new = np.ones(n, dtype=bool)
+        same = np.ones(n - 1, dtype=bool)
+        for k in keys:
+            col = tbl.column(k).combine_chunks()
+            a, b = col.slice(1), col.slice(0, n - 1)
+            eq = pc.or_kleene(
+                pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b))
+            )
+            if pa.types.is_floating(col.type):
+                eq = pc.or_kleene(eq, pc.and_(pc.is_nan(a), pc.is_nan(b)))
+            same &= pc.fill_null(eq, False).to_numpy(zero_copy_only=False)
+        new[1:] = ~same
+        gid = np.cumsum(new) - 1
+        last = np.append(np.flatnonzero(new)[1:] - 1, n - 1)
+        deleted = (
+            pc.fill_null(tbl.column(DELETED_COL), False)
+            .to_numpy()
+            .astype(bool)
+        )
+        if not self.partial:
+            return tbl.take(last[~deleted[last]])
+        lsn = tbl.column(LSN_COL).to_numpy()
+
+        def _latest(mask):
+            # per key: its last (highest-LSN) row where mask holds, or -1
+            out = np.full(len(last), -1)
+            rows = np.flatnonzero(mask)
+            g = gid[rows]
+            end = np.r_[g[1:] != g[:-1], True][: len(g)]
+            out[g[end]] = rows[end]
+            return out
+
+        dl = _latest(deleted)
+        barrier = np.where(dl >= 0, lsn[dl], np.iinfo(np.int64).min)
+
+        def _after_barrier(rows):
+            return (rows >= 0) & (lsn[rows] > barrier)
+
+        alive = _after_barrier(_latest(~deleted))
+        out = []
+        for name in tbl.column_names:
+            col = tbl.column(name)
+            if name in keys or name in (LSN_COL, DELETED_COL):
+                out.append(col.take(last[alive]))
+                continue
+            src = _latest(
+                ~deleted & pc.is_valid(col).to_numpy().astype(bool)
+            )
+            ok = _after_barrier(src)
+            out.append(col.take(pa.array(src[alive], mask=~ok[alive])))
+        return pa.table(out, schema=tbl.schema)
+
+
+def _stats_hold(stats, v) -> bool:
+    """False when a row group's column statistics prove no row holds the
+    key value ``v`` (None: the null key); missing or incomparable
+    statistics hold."""
+    if stats is None:
+        return True
+    if v is None:
+        return not (stats.has_null_count and stats.null_count == 0)
+    if not stats.has_min_max:
+        return True
+    try:
+        return not (v < stats.min or v > stats.max)
+    except TypeError:
+        return True
+
+
+def _key_mask(t, key) -> "np.ndarray":
+    """Null-safe equality of a row group's key columns with the key, as
+    a numpy bool mask (``eqNullSafe``; NaN equals NaN, as Spark has it)."""
+    import math
+
+    import pyarrow.compute as pc
+
+    m = None
+    for name, arr, v in key:
+        col = t.column(name)
+        if v is None:
+            hit = pc.is_null(col)
+        elif isinstance(v, float) and math.isnan(v):
+            hit = pc.is_nan(col)
+        else:
+            hit = pc.equal(col, arr.cast(col.type)[0])
+        hit = pc.fill_null(hit, False)
+        m = hit if m is None else pc.and_(m, hit)
+    return m.to_numpy()
 
 
 def _scalar(v) -> bool:

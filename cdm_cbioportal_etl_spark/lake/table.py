@@ -1828,21 +1828,9 @@ class LakeTable:
                         fh.write(empty)
                 fobj["bloom"] = {"m": m, "k": bloom_k}
 
-    def _bloom_words(self, fobj: dict) -> list[int] | None:
-        import struct as _struct
-
-        try:
-            with open(
-                os.path.join(self.root, fobj["path"] + ".bloom"), "rb"
-            ) as fh:
-                raw = fh.read()
-        except OSError:
-            return None
-        return list(_struct.unpack(f"<{len(raw) // 8}q", raw))
-
     @staticmethod
     def _bloom_contains(
-        bloom: dict, words: list[int], hashes: tuple[int, ...]
+        bloom: dict, words: tuple[int, ...], hashes: tuple[int, ...]
     ) -> bool:
         """Driver-side membership test; ``pmod`` of a signed 64-bit hash
         by a positive m matches Python's ``%`` exactly."""
@@ -1854,21 +1842,26 @@ class LakeTable:
                 return False
         return True
 
+    @staticmethod
     def _bloom_reject(
-        self, fobj: dict, probes: list[tuple[int, ...]] | None
+        root: str, fobj: dict, probes: list[tuple[int, ...]] | None
     ) -> bool:
-        """True when the file's bloom proves NO probe key is present.
-        Missing bloom or missing probes never reject (sound default)."""
-        if not probes:
-            return False
+        """True when the file's ``.bloom`` sidecar (under table ``root``)
+        proves NO probe key is present.  Missing bloom, sidecar or probes
+        never reject (sound default)."""
+        import struct as _struct
+
         bloom = fobj.get("bloom")
-        if not bloom:
+        if not probes or not bloom:
             return False
-        words = self._bloom_words(fobj)
-        if words is None:
+        try:
+            with open(os.path.join(root, fobj["path"] + ".bloom"), "rb") as fh:
+                raw = fh.read()
+        except OSError:
             return False
+        words = _struct.unpack(f"<{len(raw) // 8}q", raw)
         return not any(
-            self._bloom_contains(bloom, words, hs) for hs in probes
+            LakeTable._bloom_contains(bloom, words, hs) for hs in probes
         )
 
     def _pprune(self, snap: dict[str, Any], prune: dict | None) -> dict | None:
@@ -2557,7 +2550,7 @@ class LakeTable:
                 for f in snap["buckets"].get(str(b), []):
                     if not self._stats_admit(
                         f, kp
-                    ) or self._bloom_reject(f, probes):
+                    ) or self._bloom_reject(self.root, f, probes):
                         keep.append(f)
                     else:
                         admit.append(f["path"])
@@ -2895,7 +2888,7 @@ class LakeTable:
                     )
                 if not null_keys and (
                     not self._stats_admit(f, self._pprune(snap, {k0: (wmin, wmax)}))
-                    or self._bloom_reject(f, probes)
+                    or self._bloom_reject(self.root, f, probes)
                 ):
                     continue
                 admitted.setdefault(int(f["schema_id"]), []).append(f["path"])
@@ -3377,50 +3370,22 @@ class LakeTable:
         )
 
     def point_lookup(self, key_values: dict[str, Any]) -> DataFrame:
-        """Metadata-pruned point read of one key tuple: bucket pruning →
-        per-file range stats → per-file blooms (when the table carries
-        them), then the row filter.  On a bloom-carrying table the scan
-        touches only the files that can hold a version of the key —
-        O(key's files), not O(bucket) — in both merge modes (every
-        version of a key, tombstones included, lives in one bucket and
-        is bloom-admitted, so MOR resolution stays exact).
+        """The live row of one key tuple (null-safe equality on every key
+        column, so a None component matches the null key), read on the
+        driver without a Spark job.  The ``laketable`` DataSource planner
+        picks the files — the key's hash bucket, then per-file key
+        stats, then the bloom sidecars — and its Arrow reader reads them:
+        row groups whose key stats exclude the key are skipped, deletion
+        vectors and the key filter apply per row group, and equality
+        deletes and the MOR fold run over the key's rows only, so driver
+        memory is bounded by one admitted row group.  Returns a local
+        DataFrame in the table schema: the rows
+        ``read().filter(<key eqNullSafe>)`` returns.
         """
-        missing = [k for k in self.key_cols if k not in key_values]
-        if missing:
-            raise ValueError(f"point_lookup needs every key column: {missing}")
-        snap = self.snapshot
-        target = self.schema
-        dtypes = {f.name: f.dataType for f in target.fields}
-        # one 1-row job yields the bucket id and the bloom hash pair with
-        # EXACTLY the engine's hash semantics (never re-implement xxhash64
-        # driver-side)
-        probe_row = self.spark.range(1).select(
-            *[
-                F.lit(key_values[k]).cast(dtypes[k]).alias(k)
-                for k in self.key_cols
-            ]
-        )
-        r = probe_row.select(
-            F.pmod(F.xxhash64(*self.key_cols), F.lit(snap["n_buckets"]))
-            .cast("int")
-            .alias("b"),
-            *self._bloom_hash_exprs(),
-        ).collect()[0]
-        bucket = int(r["b"])
-        probes = [tuple(int(r[f"_bh_{i}"]) for i in range(self.BLOOM_K))]
-        prune = self._pprune(snap, {k: key_values[k] for k in self.key_cols})
-        paths = {
-            f["path"]
-            for f in snap["buckets"].get(str(bucket), [])
-            if self._stats_admit(f, prune)
-            and not self._bloom_reject(f, probes)
-        }
-        df = self.read(buckets={bucket}, _only_paths=paths)
-        cond = None
-        for k in self.key_cols:
-            c = F.col(k).eqNullSafe(F.lit(key_values[k]).cast(dtypes[k]))
-            cond = c if cond is None else (cond & c)
-        return df.filter(cond)
+        from .datasource import LakeTableReader
+
+        tbl = LakeTableReader(self.root, self.snapshot, {}).lookup(key_values)
+        return self.spark.createDataFrame(tbl, schema=self.schema)
 
     @staticmethod
     def _diff_plan(

@@ -11,8 +11,8 @@ over the engine's merge-on-read delta format:
   batches of change events ``(lsn, op, <data columns>)``, drops rows at
   or below the table's LSN watermark (the ledger pre-filter — the same
   exactly-once rule ``merge`` applies), assigns each row its hash
-  bucket with the Spark-bit-equal pure-Python xxhash64
-  (lake/xxh64.py — bucket assignment MUST match ``_bucket_expr`` or
+  bucket with the Spark-bit-equal vectorised xxhash64
+  (lake/xxh64_vec.py — bucket assignment MUST match ``_bucket_expr`` or
   reads would miss rows), and writes one MOR delta parquet file per
   touched bucket (physical column names + ``_lsn`` + ``_deleted``,
   exactly the shape ``merge(mode="mor")`` appends).  Per-file key/LSN
@@ -49,6 +49,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+import warnings
 from dataclasses import dataclass, field
 from typing import Any, Iterator
 
@@ -231,11 +232,14 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
         lsn_np = tbl.column("lsn").to_numpy(zero_copy_only=False)
         max_lsn = int(lsn_np.max())
         if self.prebucketed:
-            b_np = (
-                tbl.column("_bucket")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
+            bcol = tbl.column("_bucket")
+            if bcol.null_count:
+                raise ValueError(
+                    f"laketable writer: null _bucket in {bcol.null_count} "
+                    "row(s) — compute it with table.bucket_expr() against "
+                    "THIS table"
+                )
+            b_np = bcol.to_numpy(zero_copy_only=False).astype(np.int64)
             bad = (b_np < 0) | (b_np >= self.n_buckets)
             if bad.any():
                 raise ValueError(
@@ -442,14 +446,12 @@ class LakeDeltaStreamWriter(DataSourceStreamArrowWriter):
         if self._sid is None:
             sid = None
             if self._ckpt:
-                p = str(self._ckpt)
-                if p.startswith("file:"):
-                    from urllib.parse import urlparse
-                    from urllib.request import url2pathname
+                from ..streaming.ckpt import local_path
 
-                    p = url2pathname(urlparse(p).path)
                 try:
-                    with open(os.path.join(p, "metadata")) as fh:
+                    with open(
+                        os.path.join(local_path(str(self._ckpt)), "metadata")
+                    ) as fh:
                         qid = json.load(fh).get("id")
                     if qid:
                         import hashlib
@@ -459,7 +461,18 @@ class LakeDeltaStreamWriter(DataSourceStreamArrowWriter):
                         ).hexdigest()[:12]
                 except (OSError, ValueError):
                     pass
-            self._sid = sid or uuid.uuid4().hex[:12]
+            if sid is None:
+                sid = uuid.uuid4().hex[:12]
+                warnings.warn(
+                    "laketable stream writer: no readable query id under "
+                    f"checkpointLocation {self._ckpt!r}; using a random "
+                    f"stream id {sid}, so epoch dedup holds only for this "
+                    "writer instance (a restart may re-append replayed "
+                    "epochs) — pass option 'streamid' for a stable id",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
+            self._sid = sid
         return self._sid
 
     def write(self, iterator: Iterator) -> DeltaAppendResult:

@@ -1,16 +1,17 @@
 """Vectorized (numpy) xxHash64 matching Spark's ``F.xxhash64`` bit-for-bit.
 
-The scalar port in lake/xxh64.py exists so a driver-side planner can
-hash ONE key tuple without a SparkSession.  The DataSource *writer*
-task has the opposite shape: millions of rows per task, where a
-per-row Python hash loop was the measured bottleneck (BENCH.md
+This is the engine's one hash kernel outside the JVM.  The DataSource
+writer task hashes millions of rows per task, where a per-row Python
+hash loop was the measured bottleneck (BENCH.md
 "DataSource writer throughput": 413K ev/s pure-Python vs 854K with the
 JVM ``_bucket`` fast path).  This module removes that loop: the same
 XXH64 algorithm (public spec, https://github.com/Cyan4973/xxHash) with
 Spark's type-dependent encoding, computed over whole numpy arrays with
 a per-ROW seed vector (Catalyst chains columns by feeding the previous
 digest in as the next column's seed, so vectorizing a multi-column
-hash needs vector seeds).
+hash needs vector seeds).  The DataSource planner and
+``LakeTable.point_lookup`` run the same kernel on one-row arrays for a
+looked-up key's bucket and bloom probes.
 
 Shape of the byte-path vectorization: rows are padded into one
 ``(n_rows, pad)`` uint8 matrix viewed as little-endian u64/u32 words;
@@ -20,7 +21,7 @@ Python-level iteration count is O(longest key in the batch / 32),
 independent of row count.
 
 Correctness: tests/test_xxh64_vec.py asserts bit-equality against the
-scalar port (itself asserted bit-equal to the JVM in
+scalar oracle tests/xxh64_ref.py (itself asserted bit-equal to the JVM in
 tests/test_xxh64.py) over randomized draws on every type path,
 including the empty/4/8/31/32/33-byte edge shapes and null chaining.
 Never edit constants or rounds without re-running both tests — the
@@ -86,7 +87,7 @@ def hash_bytes_vec(
 ) -> np.ndarray:
     """Byte-array path over a padded ``(n, pad)`` uint8 matrix (``pad``
     a multiple of 8, zero-filled past each row's ``lens[i]``).  Matches
-    xxh64.hash_bytes row-wise; masked word reads past a row's length
+    the scalar oracle's hash_bytes row-wise; masked word reads past a row's length
     read zero padding and are discarded by the mask."""
     n, pad = u8.shape
     u64 = u8.view("<u8")
@@ -171,7 +172,7 @@ _LONG_KINDS = frozenset(("long", "timestamp", "timestamp_ntz"))
 # budget for the dense (n_rows, pad) padded byte matrix: past this, rows
 # are length-sorted and hashed in chunks so ONE oversized key value
 # cannot inflate memory/work to O(n_rows x max_key_len) — an executor
-# OOM on skewed keys otherwise (the scalar port handled such rows fine)
+# OOM on skewed keys otherwise
 _MATRIX_CAP = 1 << 28  # 256 MB
 
 

@@ -2041,10 +2041,10 @@ def cdc_datasource_read(spark, sf_dir):
 def cdc_datasource_point_lookup(spark, sf_dir):
     """Same final state and key as `cdc_point_lookup`, but the lookup
     goes through spark.read.format("laketable") with an equality filter:
-    the Python planner derives the key's hash bucket driver-side (pure-
-    Python xxhash64, lake/xxh64.py) and bloom-rejects that bucket's
-    key-free files — the O(1 bucket) plan of the native point_lookup(),
-    value-gated here against the same DuckDB fold."""
+    the Python planner derives the key's hash bucket driver-side
+    (vectorised xxhash64, lake/xxh64_vec.py) and bloom-rejects that
+    bucket's key-free files — the plan point_lookup() runs on the driver,
+    here read in a Spark job and value-gated against the same DuckDB fold."""
     from cdm_cbioportal_etl_spark.cdc import CdcReplayer
     from cdm_cbioportal_etl_spark.lake.datasource import register
 

@@ -9,11 +9,12 @@ times, median-of-reps on the SAME table:
   scan) vs ``spark.read.format("laketable")`` (Python-planned, Arrow
   batches through Python workers) — the honest price of the registry
   surface on bulk reads;
-- point lookup on the (repo, path) string key: native
-  ``table.point_lookup()`` (JVM bucket+bloom pruning) vs the datasource
-  with equality filters (driver-side pure-Python xxhash64 bucket+bloom
-  planning, lake/xxh64.py) — both plan O(1 bucket); the datasource
-  avoids the JVM hash round trip entirely at planning time.
+- point lookup on the (repo, path) string key: ``table.point_lookup()``
+  vs the datasource with equality filters.  Both run the same planner
+  (driver-side vectorised xxhash64 bucket, then file stats, then bloom
+  sidecars, lake/xxh64_vec.py) and the same key-filtered Arrow read;
+  ``point_lookup()`` runs it on the driver with no Spark job, the
+  datasource in a Python worker task of a Spark job.
 
 Prints ONE JSON line.  Usage:
     python scripts/bench_datasource.py [--events N] [--reps N]

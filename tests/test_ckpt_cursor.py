@@ -9,6 +9,8 @@ failure modes the streaming integration test pins end-to-end
 
 import os
 
+import pytest
+
 from cdm_cbioportal_etl_spark.streaming.ckpt import offsets_cursor
 
 
@@ -64,3 +66,18 @@ def test_numeric_ordering_not_lexicographic(tmp_path):
     for i in (0, 2, 10):  # lexicographic max would be "2"
         _mk(ck, "offsets", str(i), f"o{i}")
     assert offsets_cursor(ck).startswith("10:o10")
+
+
+def test_file_uri_reads_the_same_checkpoint(tmp_path):
+    ck = str(tmp_path)
+    _mk(ck, "offsets", "0", "v1\n{\"version\": 3}")
+    _mk(ck, "commits", "0")
+    c = offsets_cursor(ck)
+    assert c is not None
+    assert offsets_cursor(tmp_path.as_uri()) == c  # file:///...
+    assert offsets_cursor("file:" + ck) == c  # file:/...
+
+
+def test_non_local_checkpoint_warns():
+    with pytest.warns(RuntimeWarning, match="not on the local filesystem"):
+        assert offsets_cursor("s3a://bucket/ckpt") is None

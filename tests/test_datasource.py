@@ -353,7 +353,9 @@ def test_stream_refuses_non_streamable_commits(spark, tmp_path):
             q.stop()
 
 
-def test_partial_image_mor_read_refused(spark, tmp_path):
+def test_partial_image_mor_read_matches_native(spark, tmp_path):
+    """Pending partial-image deltas fold per column in the Arrow reader:
+    a null delta column inherits the base value."""
     t = _mk(
         spark,
         tmp_path,
@@ -368,9 +370,9 @@ def test_partial_image_mor_read_refused(spark, tmp_path):
         batch_id="b1",
         partial_update=True,
     )
-    register(spark)
-    with pytest.raises(Exception, match="per-column fold"):
-        spark.read.format("laketable").option("path", t.root).load().collect()
+    _assert_matches_native(spark, t)
+    got = _ds(spark, t).filter("repo = 'r1' AND path = 'a.py'").collect()
+    assert [(r.commit, r.content) for r in got] == [("c9", "v1")]
 
 
 def test_stream_schema_evolution_fails_then_resumes_after_restart(

@@ -381,3 +381,56 @@ def test_derived_streamid_stable_across_restart_and_fresh_after_reset(
     assert len(_state(t)) == 15, "post-reset epochs were dropped"
     sids_after = seg_sids()
     assert len(sids_after) == 2  # a NEW id after the reset
+
+
+def test_null_prebucketed_bucket_fails_clearly(spark, tmp_path):
+    """A null `_bucket` is refused by name before any numpy cast (a NaN
+    cast to int64 yields a platform-dependent garbage bucket)."""
+    import pyarrow as pa
+
+    t = _mk(spark, tmp_path, "pb-null")
+    schema = T.StructType(
+        [*IN_SCHEMA.fields, T.StructField("_bucket", T.IntegerType())]
+    )
+    w = LakeDeltaBatchWriter({"path": t.root}, schema, overwrite=False)
+    rb = pa.record_batch(
+        {
+            "lsn": [1, 2],
+            "op": ["upsert", "upsert"],
+            "k": [1, 2],
+            "g": ["a", "b"],
+            "v": [1, 2],
+            "_bucket": pa.array([0, None], pa.int32()),
+        }
+    )
+    with pytest.raises(ValueError, match="null _bucket in 1 row"):
+        w.write(iter([rb]))
+
+
+def test_stream_id_reads_file_uri_and_warns_on_uuid_fallback(
+    spark, tmp_path
+):
+    import hashlib
+    import json
+    import warnings
+
+    from cdm_cbioportal_etl_spark.lake.writer import LakeDeltaStreamWriter
+
+    t = _mk(spark, tmp_path, "sid-uri")
+    ck = tmp_path / "ck"
+    ck.mkdir()
+    (ck / "metadata").write_text(json.dumps({"id": "q-1"}))
+    w = LakeDeltaStreamWriter(
+        {"path": t.root, "checkpointlocation": ck.as_uri()}, IN_SCHEMA, False
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert w._stream_id() == hashlib.sha1(b"q-1").hexdigest()[:12]
+    lost = LakeDeltaStreamWriter(
+        {"path": t.root, "checkpointlocation": str(tmp_path / "none")},
+        IN_SCHEMA,
+        False,
+    )
+    with pytest.warns(RuntimeWarning, match="random stream id"):
+        sid = lost._stream_id()
+    assert len(sid) == 12 and lost._stream_id() == sid  # one id per writer

@@ -66,5 +66,9 @@ def test_datasource_equals_native_on_mixed_histories(
         (r["k"], r["v"]) for r in table.read().select("k", "v").collect()
     }
     assert got == native == want
+    # each key's driver-local point lookup is the same key-filtered read
+    for k in "abcd":
+        hit = {(r["k"], r["v"]) for r in table.point_lookup({"k": k}).collect()}
+        assert hit == {w for w in want if w[0] == k}, k
     # the metadata-only live count agrees with the same state
     assert table.logical_row_count() == len(want)

@@ -2,7 +2,7 @@
 upserts (each touching a random column subset) and deletes, split at an
 arbitrary batch boundary, converges — in BOTH merge modes — to the
 Python reference fold (per column: latest non-null value among upserts
-after the key's last delete)."""
+after the key's last delete), through both read() and point_lookup()."""
 
 from __future__ import annotations
 
@@ -81,3 +81,7 @@ def test_partial_replay_matches_reference_fold_both_modes(
                 t.merge(batch, partial_update=True, mode=mode)
         got = {tuple(r) for r in t.read().collect()}
         assert got == want, f"mode={mode} evs={evs} cut={cut}"
+        # the driver-local lookup folds the same way (Arrow, per column)
+        for k in ("x", "y"):
+            got_k = {tuple(r) for r in t.point_lookup({"k": k}).collect()}
+            assert got_k == {w for w in want if w[0] == k}, (mode, k, evs)

@@ -1,8 +1,9 @@
-"""Pure-Python xxhash64 (lake/xxh64.py) vs the JVM's F.xxhash64.
+"""Pure-Python xxhash64 oracle (tests/xxh64_ref.py) vs the JVM's F.xxhash64.
 
-The datasource's driver-side bucket/bloom pruning is only sound if the
-two implementations agree bit-for-bit on every type path and on the
-multi-column seed chaining — so this test IS the soundness proof, run
+Driver-side bucket/bloom pruning (lake/xxh64_vec.py, asserted equal to
+this oracle in tests/test_xxh64_vec.py) is only sound if the oracle and
+the JVM agree bit-for-bit on every type path and on the multi-column
+seed chaining — so this test is the first half of the proof, run
 over randomized draws per type including the algorithm's edge shapes
 (empty string, 4/8/31/32/33-byte strings -> tail / word / stripe paths,
 negative ints, -0.0, nulls skipped in chains).
@@ -15,7 +16,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from cdm_cbioportal_etl_spark.lake.xxh64 import pmod, xxhash64
+from xxh64_ref import pmod, xxhash64
 
 random.seed(0xC0FFEE)
 

@@ -1,9 +1,11 @@
-"""Vectorized xxhash64 (lake/xxh64_vec.py) vs the scalar port.
+"""Vectorized xxhash64 (lake/xxh64_vec.py) vs the scalar oracle
+(tests/xxh64_ref.py).
 
 The scalar port is asserted bit-equal to the JVM's ``F.xxhash64`` in
 tests/test_xxh64.py; this test closes the triangle by asserting the
 numpy-vectorized implementation (the DataSource writer's bucket
-assignment) is bit-equal to the scalar port over randomized draws on
+assignment, the planner's and point_lookup's bucket and bloom probes)
+is bit-equal to the scalar port over randomized draws on
 every type path — including the byte-path edge shapes (empty, 4/8-byte
 word tails, 31/32/33-byte stripe boundaries, multi-stripe), per-row
 seed chaining across columns, and null skipping.  If either half ever
@@ -19,7 +21,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from cdm_cbioportal_etl_spark.lake.xxh64 import pmod, xxhash64
+from xxh64_ref import pmod, xxhash64
 from cdm_cbioportal_etl_spark.lake.xxh64_vec import (
     pack_bytes_matrix,
     pmod_vec,

@@ -1,12 +1,17 @@
-"""Pure-Python xxHash64 matching Spark's ``F.xxhash64`` bit-for-bit.
+"""Pure-Python xxHash64 matching Spark's ``F.xxhash64`` bit-for-bit:
+the reference oracle for the engine's vectorised kernel.
 
 The lake's physical layout is keyed on Spark's xxhash64 — hash-bucket
 assignment is ``pmod(xxhash64(*keys), n_buckets)`` (table.py
 ``_bucket_expr``) and the per-file bloom probes are
 ``xxhash64(*keys, i)`` for ``i in range(k)`` (``_bloom_hash_exprs``).
-Planning a point lookup WITHOUT a SparkSession (the Python DataSource
-plans driver-side from manifests alone) therefore needs the same hash
-here, in Python.
+Code outside the JVM (the DataSource writer's bucket assignment, the
+DataSource planner's and ``point_lookup``'s bucket and bloom probes)
+computes these with ``lake/xxh64_vec.py``.  This scalar port is the
+readable one-value-at-a-time statement of the same algorithm, kept
+only as the test oracle between the two: tests/test_xxh64.py asserts
+it bit-equal to the JVM, tests/test_xxh64_vec.py asserts the vectorised
+kernel bit-equal to it.
 
 This implements the standard XXH64 algorithm (public spec,
 https://github.com/Cyan4973/xxHash) with Spark's type-dependent input
@@ -17,12 +22,6 @@ primitive path, long via the 8-byte path, boolean as int 1/0, float /
 double via their IEEE bit patterns (−0.0 normalized to 0.0), string as
 its UTF-8 bytes, binary as raw bytes — all little-endian, exactly as
 the JVM implementation reads words.
-
-Correctness is asserted against the JVM: tests/test_xxh64.py compares
-every path (and multi-column chains) with ``F.xxhash64`` on randomized
-inputs.  If this file and Spark ever disagree, the pruning built on it
-would be UNSOUND — never edit the constants or rounds without re-running
-that test.
 """
 
 from __future__ import annotations
@@ -138,8 +137,7 @@ def xxhash64(values, type_names, seed: int = SPARK_SEED) -> int:
     (what ``F.xxhash64`` yields).  ``type_names`` are Spark
     ``DataType.typeName()`` strings aligned with ``values``.
 
-    Raises TypeError on types this port does not cover (callers treat
-    that as "cannot plan driver-side" and fall back to no pruning)."""
+    Raises TypeError on types this port does not cover."""
     h = seed & _M
     for v, t in zip(values, type_names):
         if v is None:
