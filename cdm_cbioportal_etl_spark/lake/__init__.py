@@ -1,10 +1,4 @@
-from cdm_cbioportal_etl_spark.lake.backend import (
-    IcebergBackend,
-    MergeBackend,
-    ParquetMergeBackend,
-    iceberg_available,
-    reduce_winners,
-)
+from cdm_cbioportal_etl_spark.lake.backend import MergeBackend
 from cdm_cbioportal_etl_spark.lake.datasource import (
     LakeTableDataSource,
     register_lake_datasource,
@@ -28,7 +22,6 @@ __all__ = [
     "CatalogConflictError",
     "ConcurrentCommitError",
     "ConstraintViolationError",
-    "IcebergBackend",
     "IncrementalAggView",
     "LakeCatalog",
     "LakeSession",
@@ -36,10 +29,7 @@ __all__ = [
     "MultiTableTransaction",
     "LakeTableDataSource",
     "MergeBackend",
-    "ParquetMergeBackend",
     "SchemaEvolutionError",
     "TableReplicator",
-    "iceberg_available",
-    "reduce_winners",
     "register_lake_datasource",
 ]

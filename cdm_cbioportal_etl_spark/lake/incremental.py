@@ -31,7 +31,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .table import LakeTable
+from .table import LakeTable, _key_match
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
@@ -207,11 +207,7 @@ class IncrementalAggView:
             *[F.col(f"_d_sum_{c}") for c in self.sum_cols],
         )
         cur = self.table.read(buckets=b_ids)
-        cond = None
-        for i, g in enumerate(gkeys):
-            c = cur[g].eqNullSafe(F.col(f"_g_{i}"))
-            cond = c if cond is None else (cond & c)
-        j = d.join(cur, cond, "left")
+        j = d.join(cur, _key_match([cur[g] for g in gkeys], "_g_"), "left")
         new_cnt = F.coalesce(cur["cnt"], F.lit(0)) + F.col("_d_cnt")
         vtypes = {f.name: f.dataType for f in self.table.schema.fields}
         sums = [

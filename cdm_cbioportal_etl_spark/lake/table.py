@@ -17,11 +17,14 @@ Iceberg-style semantics implemented portably (no external jars):
   ``groupBy(key).agg(max_by(struct(...), lsn))`` — a hash aggregate with
   map-side partial combine — NOT a row_number window, so hot keys are
   pre-reduced on the map side and skew never concentrates on one reducer.
-- **Two merge modes** (table property ``merge_mode`` / per-call
+- **Three merge modes** (table property ``merge_mode`` / per-call
   ``mode``): ``cow`` rewrites touched buckets (resolution-free reads);
   ``mor`` appends per-bucket delta files with tombstones (Iceberg-v2
   merge-on-read — merge cost ~ batch bytes, reads resolve
-  latest-per-key, ``compact()`` folds deltas back to base files).
+  latest-per-key, ``compact()`` folds deltas back to base files);
+  ``dv`` kills superseded rows by position in deletion-vector sidecars
+  and appends winners as plain files (MOR's write cost, fold-free
+  reads).  All three run one ``apply_prepared`` skeleton.
 - **Exactly-once ledger**: the max applied LSN (and per-source-partition
   watermarks) live in the snapshot manifest, so the ledger update commits
   atomically with the data it covers.  Replaying a batch twice is a no-op.
@@ -39,7 +42,9 @@ module gives the same idempotence with incremental cost.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import re
 import shutil
@@ -381,6 +386,57 @@ class MergeStats:
     # stats proved them winner-free, referenced unchanged instead of
     # rewritten (0 under MOR / when stats are unavailable)
     carried_files: int = 0
+
+
+@dataclass
+class _ModeResult:
+    """What one merge mode's resolve+write step hands the shared commit
+    tail (``LakeTable._finish_apply``)."""
+
+    buckets_meta: dict[str, list[dict]]
+    bucket_rows: dict[str, int]
+    t_write: float  # perf_counter() when the mode's data write finished
+    carried_files: int = 0
+    change_files: list[str] | None = None  # None: commit records "diff"
+    dv_entry: dict[str, Any] | None = None
+
+
+def _union_all(dfs: list[DataFrame]) -> DataFrame:
+    return functools.reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def _key_match(left: list[F.Column], prefix: str) -> F.Column:
+    """Null-safe equality of the ``left`` key columns against the other
+    join side's aliased ``{prefix}0..n`` columns.  Null-SAFE because
+    groupBy keeps a null-key group: a plain equi-join would drop (or, on
+    the resolve side, duplicate) the null-key row."""
+    return functools.reduce(
+        operator.and_,
+        (c.eqNullSafe(F.col(f"{prefix}{i}")) for i, c in enumerate(left)),
+    )
+
+
+def _partial_fold_aggs(
+    live: F.Column, lsn: F.Column, values: dict[str, F.Column]
+) -> tuple[F.Column, F.Column, list[F.Column]]:
+    """Aggregates of the per-column partial-image fold over the versions
+    of one key (batch events or base row + MOR deltas): ``_dl`` (latest
+    delete LSN — the inheritance barrier), ``_ul`` (latest live LSN) and
+    per column ``_v_<c>`` / ``_l_<c>`` (value and LSN of its latest
+    non-null live occurrence).  All map-side combinable; callers keep a
+    column's value only when its ``_l_<c>`` is past the barrier."""
+    per_col = []
+    for c, v in values.items():
+        nn = live & v.isNotNull()
+        per_col += [
+            F.max_by(v, F.when(nn, lsn)).alias(f"_v_{c}"),
+            F.max(F.when(nn, lsn)).alias(f"_l_{c}"),
+        ]
+    return (
+        F.max(F.when(~live, lsn)).alias("_dl"),
+        F.max(F.when(live, lsn)).alias("_ul"),
+        per_col,
+    )
 
 
 class LakeTable:
@@ -1239,6 +1295,7 @@ class LakeTable:
         pmap = self._pnames_of(snap) if self._mapped(snap) else None
         eff_prune = self._pprune(snap, eff_prune)
         target_names = [f.name for f in target.fields]
+        eq_entries = self._scoped(snap, "eqdel", buckets)
         if columns is not None:
             missing = [c for c in columns if c not in target_names]
             if missing:
@@ -1249,12 +1306,8 @@ class LakeTable:
             # the MOR fold groups on the keys, and equality-delete kills
             # MATCH on them — both ride internally even when not
             # requested (dropped again at the end)
-            has_eq = any(
-                buckets is None or set(e.get("buckets", [])) & buckets
-                for e in snap.get("eqdel", [])
-            )
             keep_set = set(columns) | (
-                set(snap["key_cols"]) if (has_deltas or has_eq) else set()
+                set(snap["key_cols"]) if (has_deltas or eq_entries) else set()
             )
             keep = [c for c in target_names if c in keep_set]
         else:
@@ -1286,17 +1339,8 @@ class LakeTable:
         # lists covering any requested bucket.  Applied as ONE positional
         # anti-join under the union — the fold-free read that makes dv
         # merges pay no per-key resolution tax (cf. the MOR branch below)
-        dv_entries = [
-            e
-            for e in snap.get("dv", [])
-            if buckets is None or set(e.get("buckets", [])) & buckets
-        ]
+        dv_entries = self._scoped(snap, "dv", buckets)
         dv_cols = ["_dv_file", "_dv_pos"] if dv_entries else []
-        eq_entries = [
-            e
-            for e in snap.get("eqdel", [])
-            if buckets is None or set(e.get("buckets", [])) & buckets
-        ]
         parts = []
         parts_dv = []
         for sid, all_paths in sorted(by_schema.items()):
@@ -1361,40 +1405,13 @@ class LakeTable:
                     ).select(*internal, *dv_cols)
                 )
         if parts_dv:
-            hot_df = parts_dv[0]
-            for p in parts_dv[1:]:
-                hot_df = hot_df.unionByName(p)
-            dv = self.spark.read.parquet(
-                *[
-                    os.path.join(self.root, p)
-                    for e in dv_entries
-                    for p in e["files"]
-                ]
-            ).select(
-                F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
-            )
-            if (
-                sum(int(e.get("rows", 0)) for e in dv_entries)
-                <= self.DV_BROADCAST_ROWS
-            ):
-                # small dead-set: ship it to every task instead of
-                # shuffling the scan.  Measured crossover: building a
-                # multi-million-row broadcast hash relation costs more
-                # than shuffling both sides (6-10s vs 1.7-2.3s at 3.6M
-                # dead / 8.2M scanned), so large dead sets take the
-                # shuffle-hash path — never sort-merge, the dead set is
-                # always the small side
-                dv = F.broadcast(dv)
-            else:
-                dv = dv.hint("shuffle_hash")
+            hot_df = _union_all(parts_dv)
             parts.append(
-                hot_df.join(dv, ["_dv_file", "_dv_pos"], "left_anti").drop(
-                    "_dv_file", "_dv_pos"
-                )
+                hot_df.join(
+                    self._dead_positions(dv_entries), ["_dv_file", "_dv_pos"], "left_anti"
+                ).drop("_dv_file", "_dv_pos")
             )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = _union_all(parts)
         if eq_entries:
             # equality deletes: a row version dies when some recorded key
             # tuple matches it at a delete LSN at or above the row's own.
@@ -1406,42 +1423,12 @@ class LakeTable:
             # are gone).  One anti-join per scan until compact() retires
             # the entries.
             keys = snap["key_cols"]
-            eqs = []
-            # equality-delete files hold PHYSICAL key names
-            pmk = self._pnames_of(snap) if self._mapped(snap) else {}
-            key_schema = T.StructType(
-                [
-                    T.StructField(pmk.get(f.name, f.name), f.dataType, True)
-                    for f in target.fields
-                    if f.name in set(keys)
-                ]
+            df = df.join(
+                self._eq_delete_keys(snap, eq_entries, target),
+                (df[LSN_COL] <= F.col("_eq_lsn"))
+                & _key_match([df[k] for k in keys], "_eqk_"),
+                "left_anti",
             )
-            for e in eq_entries:
-                eqs.append(
-                    self.spark.read.schema(key_schema)
-                    .parquet(*[os.path.join(self.root, p) for p in e["files"]])
-                    .select(
-                        *[
-                            F.col(pmk.get(k, k)).alias(f"_eqk_{i}")
-                            for i, k in enumerate(keys)
-                        ],
-                        F.lit(int(e["lsn"])).cast("long").alias("_eq_lsn"),
-                    )
-                )
-            eq = eqs[0]
-            for q in eqs[1:]:
-                eq = eq.unionByName(q)
-            if (
-                sum(int(e.get("rows", 0)) for e in eq_entries)
-                <= self.DV_BROADCAST_ROWS
-            ):
-                eq = F.broadcast(eq)
-            else:
-                eq = eq.hint("shuffle_hash")
-            cond = df[LSN_COL] <= F.col("_eq_lsn")
-            for i, k in enumerate(keys):
-                cond = cond & df[k].eqNullSafe(F.col(f"_eqk_{i}"))
-            df = df.join(eq, cond, "left_anti")
         if has_deltas:
             keys = snap["key_cols"]
             if snap.get("properties", {}).get("partial_updates"):
@@ -1453,28 +1440,17 @@ class LakeTable:
                 # inheritance barrier; each column takes its latest
                 # non-null live occurrence after it.  Still ONE map-side-
                 # combinable aggregate on the key.
-                live = ~F.col(DELETED_COL)
                 nk = [
                     c
                     for c in df.columns
                     if c not in keys and c not in (LSN_COL, DELETED_COL)
                 ]
-                aggs = [
-                    F.max(F.when(~live, F.col(LSN_COL))).alias("_dl"),
-                    F.max(F.when(live, F.col(LSN_COL))).alias("_ul"),
-                    F.max(F.col(LSN_COL)).alias("_maxl"),
-                ]
-                for c in nk:
-                    nn = live & F.col(c).isNotNull()
-                    aggs.append(
-                        F.max_by(F.col(c), F.when(nn, F.col(LSN_COL))).alias(
-                            f"_v_{c}"
-                        )
-                    )
-                    aggs.append(
-                        F.max(F.when(nn, F.col(LSN_COL))).alias(f"_l_{c}")
-                    )
-                folded = df.groupBy(*keys).agg(*aggs)
+                dl_agg, ul_agg, per_col = _partial_fold_aggs(
+                    ~F.col(DELETED_COL), F.col(LSN_COL), {c: F.col(c) for c in nk}
+                )
+                folded = df.groupBy(*keys).agg(
+                    dl_agg, ul_agg, F.max(F.col(LSN_COL)).alias("_maxl"), *per_col
+                )
                 dl = F.coalesce(F.col("_dl"), F.lit(-(2 ** 62)).cast("long"))
                 df = folded.filter(
                     F.col("_ul").isNotNull() & (F.col("_ul") > dl)
@@ -1507,6 +1483,66 @@ class LakeTable:
                     .drop(DELETED_COL)
                 )
         return df.select(*final_cols)
+
+    # -- kill sets: shared by read() and the DV position scan ----------- #
+    @staticmethod
+    def _scoped(snap: dict[str, Any], kind: str, buckets: set[int] | None) -> list[dict]:
+        """The snapshot's ``kind`` ("dv" / "eqdel") entries covering any
+        of ``buckets`` (None = all)."""
+        return [
+            e
+            for e in snap.get(kind, [])
+            if buckets is None or set(e.get("buckets", [])) & buckets
+        ]
+
+    def _kill_set(self, df: DataFrame, entries: list[dict]) -> DataFrame:
+        # small dead-set: ship it to every task instead of shuffling the
+        # scan.  Measured crossover: building a multi-million-row
+        # broadcast hash relation costs more than shuffling both sides
+        # (6-10s vs 1.7-2.3s at 3.6M dead / 8.2M scanned), so large dead
+        # sets take the shuffle-hash path — never sort-merge, the dead
+        # set is always the small side
+        if sum(int(e.get("rows", 0)) for e in entries) <= self.DV_BROADCAST_ROWS:
+            return F.broadcast(df)
+        return df.hint("shuffle_hash")
+
+    def _dead_positions(self, entries: list[dict]) -> DataFrame:
+        """Deletion-vector kill set ``(_dv_file, _dv_pos)`` of ``entries``,
+        for a left-anti join on those two columns."""
+        dv = self.spark.read.parquet(
+            *[os.path.join(self.root, p) for e in entries for p in e["files"]]
+        ).select(F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos"))
+        return self._kill_set(dv, entries)
+
+    def _eq_delete_keys(
+        self, snap: dict[str, Any], entries: list[dict], target: T.StructType
+    ) -> DataFrame:
+        """Equality-delete kill set of ``entries``: the recorded key tuples
+        as ``_eqk_0..n`` plus their delete LSN ``_eq_lsn`` — a row version
+        dies when its key matches null-safely at a delete LSN at or above
+        its own."""
+        keys = snap["key_cols"]
+        # equality-delete files hold PHYSICAL key names
+        pmk = self._pnames_of(snap) if self._mapped(snap) else {}
+        key_schema = T.StructType(
+            [
+                T.StructField(pmk.get(f.name, f.name), f.dataType, True)
+                for f in target.fields
+                if f.name in set(keys)
+            ]
+        )
+        eq = _union_all(
+            [
+                self.spark.read.schema(key_schema)
+                .parquet(*[os.path.join(self.root, p) for p in e["files"]])
+                .select(
+                    *[F.col(pmk.get(k, k)).alias(f"_eqk_{i}") for i, k in enumerate(keys)],
+                    F.lit(int(e["lsn"])).cast("long").alias("_eq_lsn"),
+                )
+                for e in entries
+            ],
+        )
+        return self._kill_set(eq, entries)
 
     # ------------------------------------------------------------------ #
     # write path
@@ -1618,22 +1654,29 @@ class LakeTable:
         files instead of diffing two snapshots (which costs a scan of
         every REWRITTEN file, 250x more rows than changed in the
         measured steady state)."""
-        out_rel = os.path.join("changes", f"c-{uuid.uuid4().hex}")
-        out_abs = os.path.join(self.root, out_rel)
-        if self._mapped(self.snapshot):
-            # change files live in PHYSICAL name space like data files —
-            # a later rename must not strand them
-            pm = self._pnames_of(self.snapshot)
-            changes = changes.select(
-                *[
-                    F.col(c).alias(pm[c]) if c in pm else F.col(c)
-                    for c in changes.columns
-                ]
-            )
         # change sets are batch-sized: collapse to few files so the read
         # side stays one-task-per-commit at CDC batch sizes
-        n = max(1, min(32, n_keys // 500_000 + 1))
-        changes.repartition(n).write.parquet(out_abs)
+        return self._write_side_files(
+            changes, "changes", max(1, min(32, n_keys // 500_000 + 1))
+        )
+
+    def _write_side_files(
+        self, df: DataFrame, subdir: str, n_files: int, physical: bool = True
+    ) -> list[str]:
+        """Write ``df`` as ``n_files`` parquet files into a fresh
+        ``<subdir>/<initial>-<uuid>/`` directory (``changes/c-…``,
+        ``dv/d-…``, ``eqdel/e-…``); return their table-relative paths."""
+        out_rel = os.path.join(subdir, f"{subdir[0]}-{uuid.uuid4().hex}")
+        out_abs = os.path.join(self.root, out_rel)
+        if physical and self._mapped(self.snapshot):
+            # column-named sidecars (change rows, equality-delete keys)
+            # live in PHYSICAL name space like data files — a later
+            # rename must not strand them
+            pm = self._pnames_of(self.snapshot)
+            df = df.select(
+                *[F.col(c).alias(pm[c]) if c in pm else F.col(c) for c in df.columns]
+            )
+        df.repartition(n_files).write.parquet(out_abs)
         return [
             os.path.join(out_rel, fn)
             for fn in sorted(os.listdir(out_abs))
@@ -1935,6 +1978,22 @@ class LakeTable:
             )
         )
 
+    def _new_events(self, batch: DataFrame, lsn_col: str, applied: int) -> DataFrame:
+        """The batch's events past the ``applied`` watermark, with the LSN
+        as long and the key columns cast to their declared types."""
+        target = self.schema
+        batch = batch.withColumn(lsn_col, F.col(lsn_col).cast("long"))
+        # KEY columns must be cast to the declared schema types BEFORE
+        # anything hashes them: Spark's murmur3 is type-sensitive
+        # (hash(0 as int) != hash(0 as bigint)), so an INT-typed key from
+        # e.g. a SQL VALUES literal would bucket to the wrong file and
+        # split the key's versions across buckets — found as a DELETE
+        # that left its row behind.  Non-key columns are cast at the
+        # payload projections.
+        for k in self.key_cols:
+            batch = batch.withColumn(k, F.col(k).cast(target[k].dataType))
+        return batch.filter(F.col(lsn_col) > F.lit(applied))
+
     def prepare_batch(
         self,
         batch: DataFrame,
@@ -1985,20 +2044,18 @@ class LakeTable:
             # path this docstring warns about
             raise ValueError(f"invalid prepare strategy: {strategy}")
 
-        batch = batch.withColumn(lsn_col, F.col(lsn_col).cast("long"))
-        # KEY columns must be cast to the declared schema types BEFORE
-        # anything hashes them: Spark's murmur3 is type-sensitive
-        # (hash(0 as int) != hash(0 as bigint)), so an INT-typed key from
-        # e.g. a SQL VALUES literal would bucket to the wrong file and
-        # split the key's versions across buckets — found as a DELETE
-        # that left its row behind.  Non-key columns are cast at the
-        # payload projections.
-        for k in keys:
-            batch = batch.withColumn(k, F.col(k).cast(target[k].dataType))
-        new_events = batch.filter(F.col(lsn_col) > F.lit(applied))
+        new_events = self._new_events(batch, lsn_col, applied)
 
-        data_cols = [f.name for f in target.fields]
         have = set(new_events.columns)
+        # payload columns, null-filled when the batch lacks them
+        nk_payload = [
+            (F.col(f.name) if f.name in have else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in target.fields
+            if f.name not in keys
+        ]
+        data_cols = [f.name for f in target.fields]
 
         winners_slim = None
         if strategy == "auto":
@@ -2023,16 +2080,7 @@ class LakeTable:
                 # probe result is not consumed by this branch — free its
                 # checkpointed blocks now instead of waiting for driver GC
                 winners_slim.unpersist()
-            payload = F.struct(
-                F.col(op_col).alias("_op"),
-                *[
-                    (F.col(c) if c in have else F.lit(None))
-                    .cast(target[c].dataType)
-                    .alias(c)
-                    for c in data_cols
-                    if c not in keys
-                ],
-            )
+            payload = F.struct(F.col(op_col).alias("_op"), *nk_payload)
             src = new_events
             if salt_partitions > 1:
                 # two-phase salted reduction for pathological hot keys: a
@@ -2101,12 +2149,10 @@ class LakeTable:
             "_w_lsn",
             "_n_events",
         )
-        cond = None
-        for i, k in enumerate(keys):
-            c = new_events[k].eqNullSafe(F.col(f"_wk_{i}"))
-            cond = c if cond is None else (cond & c)
         out = (
-            new_events.join(F.broadcast(ws), cond, "inner")
+            new_events.join(
+                F.broadcast(ws), _key_match([new_events[k] for k in keys], "_wk_"), "inner"
+            )
             .drop(*[f"_wk_{i}" for i in range(len(keys))])
             .filter(F.col(lsn_col) == F.col("_w_lsn"))
             .dropDuplicates([*keys])
@@ -2114,13 +2160,7 @@ class LakeTable:
                 *keys,
                 F.col(op_col).alias("_op"),
                 F.col(lsn_col).alias(LSN_COL),
-                *[
-                    (F.col(c) if c in have else F.lit(None))
-                    .cast(target[c].dataType)
-                    .alias(c)
-                    for c in data_cols
-                    if c not in keys
-                ],
+                *nk_payload,
                 "_n_events",
             )
             .withColumn("_bucket", self._bucket_expr())
@@ -2159,17 +2199,7 @@ class LakeTable:
         target = self.schema
         keys = self.key_cols
         applied = self.snapshot["ledger"]["applied_lsn"]
-        batch = batch.withColumn(lsn_col, F.col(lsn_col).cast("long"))
-        # KEY columns must be cast to the declared schema types BEFORE
-        # anything hashes them: Spark's murmur3 is type-sensitive
-        # (hash(0 as int) != hash(0 as bigint)), so an INT-typed key from
-        # e.g. a SQL VALUES literal would bucket to the wrong file and
-        # split the key's versions across buckets — found as a DELETE
-        # that left its row behind.  Non-key columns are cast at the
-        # payload projections.
-        for k in keys:
-            batch = batch.withColumn(k, F.col(k).cast(target[k].dataType))
-        new_events = batch.filter(F.col(lsn_col) > F.lit(applied))
+        new_events = self._new_events(batch, lsn_col, applied)
         data_cols = [f.name for f in target.fields if f.name not in keys]
         have = set(new_events.columns)
         is_up = F.col(op_col) != "delete"
@@ -2178,19 +2208,16 @@ class LakeTable:
             col = F.col(c) if c in have else F.lit(None)
             return col.cast(target[c].dataType)
 
-        aggs = [F.max(F.when(~is_up, F.col(lsn_col))).alias("_dl")]
-        for c in data_cols:
-            nn = is_up & _c(c).isNotNull()
-            aggs.append(
-                F.max_by(_c(c), F.when(nn, F.col(lsn_col))).alias(f"_v_{c}")
-            )
-            aggs.append(F.max(F.when(nn, F.col(lsn_col))).alias(f"_l_{c}"))
-        aggs += [
-            F.max(F.when(is_up, F.col(lsn_col))).alias("_ul"),
+        dl_agg, ul_agg, per_col = _partial_fold_aggs(
+            is_up, F.col(lsn_col), {c: _c(c) for c in data_cols}
+        )
+        folded = new_events.groupBy(*keys).agg(
+            dl_agg,
+            *per_col,
+            ul_agg,
             F.max(F.col(lsn_col)).alias(LSN_COL),
             F.count(F.lit(1)).alias("_n_events"),
-        ]
-        folded = new_events.groupBy(*keys).agg(*aggs)
+        )
         dl = F.coalesce(F.col("_dl"), F.lit(-(2 ** 62)).cast("long"))
         out = folded.select(
             *keys,
@@ -2336,7 +2363,7 @@ class LakeTable:
         partial_update: bool = False,
     ) -> MergeStats:
         """Phase 2 of MERGE: apply a prepared winner set and commit data +
-        ledger atomically, in one of two physical modes (``mode`` param,
+        ledger atomically, in one of three physical modes (``mode`` param,
         else table property ``merge_mode``, default ``cow``):
 
         - **cow** (copy-on-write): touched buckets are read and rewritten
@@ -2351,28 +2378,30 @@ class LakeTable:
           ``rows_after``/``row_count()`` are PHYSICAL rows (including
           tombstones and superseded versions) — logical counts require a
           resolved read.
+        - **dv** (deletion vectors): superseded rows are killed by
+          position and winners append as ordinary files — MOR's O(batch)
+          write with COW's fold-free read (see ``_resolve_dv``).
 
-        Exactly-once, watermark, lineage, and schema-evolution semantics
-        are identical in both modes.
+        Every mode runs ONE skeleton: the watermark filter and a single
+        gate aggregate, the mode/partial-image validation, the mode's
+        resolve+write step (``_resolve_cow`` / ``_resolve_mor`` /
+        ``_resolve_dv``, each returning a ``_ModeResult``), then the
+        shared commit tail ``_finish_apply``.  Exactly-once, watermark,
+        lineage, and schema-evolution semantics are identical in all
+        modes.
         """
-        import time as _time
-
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         snap = json.loads(json.dumps(self.snapshot))
-        target = self.schema
-        keys = self.key_cols
         applied = snap["ledger"]["applied_lsn"]
-        data_cols = [f.name for f in target.fields]
-        count_batch = batch_total >= 0
 
         # re-enforce the ledger watermark at commit time — makes a prepared
         # batch idempotent even when prepare() ran against an older snapshot
         reduced = reduced.filter(F.col(LSN_COL) > F.lit(applied))
 
         # _wmin/_wmax/_nullk ride the same single gate job: the winner
-        # key range drives COW file skipping below (deletes included —
-        # their target files must be admitted for rewrite)
-        k0 = keys[0]
+        # key range drives COW file skipping and DV candidate admission
+        # (deletes included — their target files must be admitted)
+        k0 = self.key_cols[0]
         agg = reduced.agg(
             F.count(F.lit(1)).alias("keys"),
             F.sum("_n_events").alias("rows"),
@@ -2386,36 +2415,26 @@ class LakeTable:
         if not agg["keys"]:
             # everything already applied — pure idempotent no-op
             return MergeStats(
-                batch_rows=batch_total if count_batch else 0, batch_keys=0,
+                batch_rows=max(batch_total, 0), batch_keys=0,
                 touched_buckets=0,
                 total_buckets=snap["n_buckets"], upserts=0, deletes=0,
                 rows_after=-1, skipped_already_applied=batch_total,
             )
         touched = {int(b) for b in agg["buckets"]}
-        t_gate = _time.perf_counter()
+        t_gate = time.perf_counter()
 
-        # 3) resolve against the existing table.  Strategy chosen from the
-        #    OBSERVED winner count (AQE-style):
-        out_cols = [*keys, *[c for c in data_cols if c not in keys], LSN_COL, "_bucket"]
-        n_part = min(snap["n_buckets"], 64)
         mode = mode or snap.get("properties", {}).get("merge_mode", "cow")
         if mode not in ("cow", "mor", "dv"):
             raise ValueError(f"invalid merge mode: {mode}")
         partial_table = bool(snap.get("properties", {}).get("partial_updates"))
-        if mode == "dv":
-            if partial_update or partial_table:
-                # a DV commit replaces superseded rows POSITIONALLY — it
-                # keeps no older versions for a per-column inheritance
-                # fold to read through, so partial images (null =
-                # unchanged) would materialize their nulls as values
-                raise ValueError(
-                    "deletion-vector merges need full-row images; "
-                    "partial-image tables must use cow or mor"
-                )
-            return self._apply_dv(
-                reduced, snap, agg, touched, applied, batch_total,
-                count_batch, batch_id, source_watermarks, extra_lineage,
-                applied_segments, t0, t_gate, n_part,
+        if mode == "dv" and (partial_update or partial_table):
+            # a DV commit replaces superseded rows POSITIONALLY — it
+            # keeps no older versions for a per-column inheritance
+            # fold to read through, so partial images (null =
+            # unchanged) would materialize their nulls as values
+            raise ValueError(
+                "deletion-vector merges need full-row images; "
+                "partial-image tables must use cow or mor"
             )
         if partial_update and mode == "mor" and not partial_table:
             # a partial delta row is NOT a row version: the default MOR
@@ -2436,57 +2455,68 @@ class LakeTable:
                 "partial_updates tables accept merge-on-read batches only "
                 "with partial_update=True (full images must use cow)"
             )
-        if mode == "mor":
-            # merge-on-read: append winner rows + tombstones as delta
-            # files — no existing-bucket read, no rewrite
-            delta = reduced.select(
+        step = {
+            "cow": self._resolve_cow,
+            "mor": self._resolve_mor,
+            "dv": self._resolve_dv,
+        }[mode]
+        res = step(snap, reduced, agg, touched, partial_update)
+        return self._finish_apply(
+            snap, agg, touched, res,
+            batch_total=batch_total, batch_id=batch_id,
+            source_watermarks=source_watermarks, extra_lineage=extra_lineage,
+            applied_segments=applied_segments, t0=t0, t_gate=t_gate,
+        )
+
+    # -- per-mode resolve+write steps of apply_prepared ----------------- #
+    def _resolve_mor(self, snap, reduced, agg, touched, partial_update) -> _ModeResult:
+        """Merge-on-read: append winner rows + tombstones as delta files —
+        no existing-bucket read, no rewrite."""
+        target = self.schema
+        keys = self.key_cols
+        nk_cols = [f.name for f in target.fields if f.name not in keys]
+        delta = reduced.select(
+            *keys,
+            *nk_cols,
+            F.col(LSN_COL),
+            (F.col("_op") == "delete").alias(DELETED_COL),
+            "_bucket",
+        )
+        if partial_update:
+            # keys whose batch had a delete BELOW surviving upserts
+            # also append the tombstone at the delete's own LSN — the
+            # read-side inheritance barrier
+            tomb = reduced.filter(
+                F.col("_reset") & (F.col("_op") != "delete")
+            ).select(
                 *keys,
-                *[c for c in data_cols if c not in keys],
-                F.col(LSN_COL),
-                (F.col("_op") == "delete").alias(DELETED_COL),
+                *[F.lit(None).cast(target[c].dataType).alias(c) for c in nk_cols],
+                F.col("_dl").alias(LSN_COL),
+                F.lit(True).alias(DELETED_COL),
                 "_bucket",
             )
-            if partial_update:
-                # keys whose batch had a delete BELOW surviving upserts
-                # also append the tombstone at the delete's own LSN — the
-                # read-side inheritance barrier
-                tomb = reduced.filter(
-                    F.col("_reset") & (F.col("_op") != "delete")
-                ).select(
-                    *keys,
-                    *[
-                        F.lit(None).cast(target[c].dataType).alias(c)
-                        for c in data_cols
-                        if c not in keys
-                    ],
-                    F.col("_dl").alias(LSN_COL),
-                    F.lit(True).alias(DELETED_COL),
-                    "_bucket",
-                )
-                delta = delta.unionByName(tomb)
-            delta = delta.repartition(n_part, "_bucket")
-            mapping = self._write_bucket_files(delta, snap["schema_id"], pre_bucketed=True)
-            for files in mapping.values():
-                for fobj in files:
-                    fobj["delta"] = True
-            t_write = _time.perf_counter()
-            buckets_meta = {b: list(files) for b, files in snap["buckets"].items()}
-            prior_rows = snap.get("bucket_rows", {})
-            bucket_rows = {
-                # NOT dict.get(b, default): the default is evaluated
-                # eagerly, which would footer-read EVERY table file per
-                # merge — the opposite of metadata-only counting
-                b: (prior_rows[b] if b in prior_rows else self._files_rows(files))
-                for b, files in buckets_meta.items()
-            }
-            for b, files in mapping.items():
-                buckets_meta[b] = buckets_meta.get(b, []) + files
-                bucket_rows[b] = bucket_rows.get(b, 0) + self._files_rows(files)
-            return self._finish_apply(
-                snap, agg, touched, buckets_meta, bucket_rows, applied,
-                batch_total, count_batch, batch_id, source_watermarks,
-                extra_lineage, applied_segments, t0, t_gate, t_write,
-            )
+            delta = delta.unionByName(tomb)
+        delta = delta.repartition(min(snap["n_buckets"], 64), "_bucket")
+        mapping = self._write_bucket_files(delta, snap["schema_id"], pre_bucketed=True)
+        for files in mapping.values():
+            for fobj in files:
+                fobj["delta"] = True
+        t_write = time.perf_counter()
+        buckets_meta = {b: list(files) for b, files in snap["buckets"].items()}
+        for b, files in mapping.items():
+            buckets_meta[b] = buckets_meta.get(b, []) + files
+        return _ModeResult(
+            buckets_meta, self._bucket_rows(snap, buckets_meta, added=mapping), t_write
+        )
+
+    def _resolve_cow(self, snap, reduced, agg, touched, partial_update) -> _ModeResult:
+        """Copy-on-write: read the touched buckets' admitted files, fold
+        the winners in and rewrite them; files proven winner-free are
+        carried unchanged."""
+        keys = self.key_cols
+        data_cols = [f.name for f in self.schema.fields]
+        out_cols = [*keys, *[c for c in data_cols if c not in keys], LSN_COL, "_bucket"]
+        n_part = min(snap["n_buckets"], 64)
         # ---- COW file skipping (Iceberg's real rewrite granularity) ----
         # Within each touched bucket, a base file whose key-range stats
         # are disjoint from the batch's winner range [wmin, wmax] cannot
@@ -2505,9 +2535,8 @@ class LakeTable:
         # and resolving from a partial version set could emit a stale row
         # into a base file; (d) a batch with null first-key winners
         # disables skipping (file stats are null-blind).
-        wmin, wmax = agg["_wmin"], agg["_wmax"]
         file_skip = (
-            wmin is not None
+            agg["_wmin"] is not None
             and int(agg["_nullk"]) == 0
             and str(
                 snap.get("properties", {}).get("cow_file_skip", "true")
@@ -2521,65 +2550,29 @@ class LakeTable:
             if any(f.get("delta") for f in snap["buckets"].get(str(b), []))
         }
         if file_skip:
-            # bloom probes close the range gap: a point-update batch whose
-            # keys hash-scatter across the whole keyspace admits EVERY
-            # file by range, but each file's bloom rejects keys it
-            # provably lacks.  Probing costs one small job collecting the
-            # winner (h1, h2) hash pairs, so it is gated to small batches
-            # (property bloom_probe_keys, default 1024) on tables that
-            # carry blooms at all.
-            probes: list[tuple[int, int]] | None = None
-            probe_cap = int(
-                snap.get("properties", {}).get("bloom_probe_keys", 1024)
+            carried, admitted = self._admit_files(
+                snap, reduced, agg, touched - delta_buckets
             )
-            has_blooms = any(
-                f.get("bloom")
-                for b in touched - delta_buckets
-                for f in snap["buckets"].get(str(b), [])
-            )
-            if has_blooms and int(agg["keys"]) <= probe_cap:
-                probes = [
-                    tuple(int(v) for v in r)
-                    for r in reduced.select(*self._bloom_hash_exprs())
-                    .distinct()
-                    .collect()
-                ]
-            kp = self._pprune(snap, {k0: (wmin, wmax)})
-            for b in touched - delta_buckets:
-                keep, admit = [], []
-                for f in snap["buckets"].get(str(b), []):
-                    if not self._stats_admit(
-                        f, kp
-                    ) or self._bloom_reject(self.root, f, probes):
-                        keep.append(f)
-                    else:
-                        admit.append(f["path"])
-                if keep:
-                    carried[str(b)] = keep
-                admitted_paths.update(admit)
+            admitted_paths = {f["path"] for f in admitted}
 
-        def _scan_existing() -> DataFrame:
-            # the explicit path set is the EXACT complement of `carried`
-            # (one decision site — range stats + bloom — drives both the
-            # carry and the scan); delta buckets scan in full
-            if not file_skip:
-                return self.read(buckets=touched, with_lsn=True)
+        # the explicit path set is the EXACT complement of `carried` (one
+        # decision site — range stats + bloom — drives both the carry and
+        # the scan); delta buckets scan in full
+        if not file_skip:
+            existing = self.read(buckets=touched, with_lsn=True)
+        else:
             parts = []
             cow_buckets = touched - delta_buckets
             if cow_buckets:
                 parts.append(
                     self.read(
-                        buckets=cow_buckets,
-                        with_lsn=True,
-                        _only_paths=admitted_paths,
+                        buckets=cow_buckets, with_lsn=True, _only_paths=admitted_paths
                     )
                 )
             if delta_buckets:
                 parts.append(self.read(buckets=delta_buckets, with_lsn=True))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
+            existing = _union_all(parts)
+        existing = existing.withColumn("_bucket", self._bucket_expr())
 
         # write-time CDF is captured on the broadcast-resolve path only:
         # pre-images there cost one bounded extra read of the admitted
@@ -2588,63 +2581,9 @@ class LakeTable:
         # table-sized shuffle to capture pre-images, so those commits
         # mark themselves "diff" and table_changes falls back to the
         # snapshot-diff feed for intervals containing them.
-        write_cdf = str(
-            snap.get("properties", {}).get("write_changes", "false")
-        ).lower() == "true"
         change_files: list[str] | None = None
         if partial_update:
-            # partial-image resolve: winners may carry nulls meaning
-            # "unchanged", so matched existing rows ENRICH the winner
-            # (per-column coalesce) instead of being replaced outright —
-            # unless the batch contained a delete for the key (_reset:
-            # the row was logically re-created, nulls stay null).  One
-            # null-safe full-outer key join (sort-merge, both sides
-            # shuffle once) — the same exchange budget as the shuffle
-            # resolve; a broadcast variant mirroring the non-partial fast
-            # path is a straightforward specialization if partial batches
-            # are ever the hot path.
-            existing = _scan_existing().withColumn("_bucket", self._bucket_expr())
-            nk_cols = [c for c in data_cols if c not in keys]
-            e = existing.select(
-                *[F.col(k).alias(f"_ek_{i}") for i, k in enumerate(keys)],
-                *[F.col(c).alias(f"_e_{c}") for c in nk_cols],
-                F.col(LSN_COL).alias("_e_lsn"),
-                F.col("_bucket").alias("_e_bucket"),
-                F.lit(1).alias("_ep"),
-            )
-            w = reduced.withColumn("_wp", F.lit(1))
-            cond = None
-            for i, k in enumerate(keys):
-                c = w[k].eqNullSafe(F.col(f"_ek_{i}"))
-                cond = c if cond is None else (cond & c)
-            j = w.join(e, cond, "full_outer")
-            present = F.col("_wp").isNotNull()
-            resolved = (
-                j.filter(~present | (F.col("_op") != "delete"))
-                .select(
-                    *[
-                        F.when(present, w[k])
-                        .otherwise(F.col(f"_ek_{i}"))
-                        .alias(k)
-                        for i, k in enumerate(keys)
-                    ],
-                    *[
-                        F.when(~present, F.col(f"_e_{c}"))
-                        .when(F.col("_reset"), w[c])
-                        .otherwise(F.coalesce(w[c], F.col(f"_e_{c}")))
-                        .alias(c)
-                        for c in nk_cols
-                    ],
-                    F.when(present, w[LSN_COL])
-                    .otherwise(F.col("_e_lsn"))
-                    .alias(LSN_COL),
-                    F.when(present, w["_bucket"])
-                    .otherwise(F.col("_e_bucket"))
-                    .alias("_bucket"),
-                )
-                .select(*out_cols)
-                .repartition(n_part, "_bucket")
-            )
+            resolved = self._resolve_partial(reduced, existing, out_cols)
         elif int(agg["keys"]) <= self._winner_threshold():
             # broadcast resolve — no key-shuffle of any payload: the slim
             # winner key set is broadcast against the existing scan.
@@ -2667,13 +2606,10 @@ class LakeTable:
                     F.lit(1).alias("_w"),
                 )
             )
-            existing = _scan_existing().withColumn("_bucket", self._bucket_expr())
-            cond = None
-            for i, k in enumerate(keys):
-                c = existing[k].eqNullSafe(F.col(f"_wk_{i}"))
-                cond = c if cond is None else (cond & c)
             kept_existing = (
-                existing.join(w_keys, cond, "left")
+                existing.join(
+                    w_keys, _key_match([existing[k] for k in keys], "_wk_"), "left"
+                )
                 .filter(F.col("_w").isNull())
                 .drop("_w", *[f"_wk_{i}" for i in range(len(keys))])
             )
@@ -2683,87 +2619,25 @@ class LakeTable:
             resolved = kept_existing.select(*out_cols).unionByName(
                 kept_winners.repartition(n_part, "_bucket")
             )
-            if write_cdf:
-                # write-time CDF capture: pre-images come from ONE extra
-                # pass over the admitted existing files (inner broadcast
-                # join against winner keys — O(changed data), and the
-                # only place the old values still exist before the COW
-                # rewrite drops them); the result is winner-bounded, so
-                # checkpointing it is cheap and lets the post-image
-                # classification reuse it without re-scanning
+            if self._write_cdf(snap):
+                # pre-images come from ONE extra pass over the admitted
+                # existing files (inner broadcast join against winner
+                # keys — O(changed data), and the only place the old
+                # values still exist before the COW rewrite drops them)
                 w_slim = F.broadcast(
                     reduced.select(
                         *[F.col(k).alias(f"_ck_{i}") for i, k in enumerate(keys)],
                         F.col("_op").alias("_c_op"),
                     )
                 )
-                ccond = None
-                for i, k in enumerate(keys):
-                    c = existing[k].eqNullSafe(F.col(f"_ck_{i}"))
-                    ccond = c if ccond is None else (ccond & c)
-                pre = (
-                    existing.join(w_slim, ccond, "inner")
-                    .select(
-                        *data_cols,
-                        F.col(LSN_COL),
-                        F.when(F.col("_c_op") == "delete", F.lit("delete"))
-                        .otherwise(F.lit("update_preimage"))
-                        .alias("_change_type"),
-                    )
-                    .localCheckpoint()
+                hits = existing.join(
+                    w_slim, _key_match([existing[k] for k in keys], "_ck_"), "inner"
                 )
-                matched = F.broadcast(
-                    pre.select(
-                        *[F.col(k).alias(f"_mk_{i}") for i, k in enumerate(keys)]
-                    )
-                    .distinct()
-                    .withColumn("_m", F.lit(1))
-                )
-                mcond = None
-                for i, k in enumerate(keys):
-                    c = F.col(k).eqNullSafe(F.col(f"_mk_{i}"))
-                    mcond = c if mcond is None else (mcond & c)
-                post = (
-                    reduced.filter(F.col("_op") != "delete")
-                    .join(matched, mcond, "left")
-                    .select(
-                        *data_cols,
-                        F.col(LSN_COL),
-                        F.when(F.col("_m").isNotNull(), F.lit("update_postimage"))
-                        .otherwise(F.lit("insert"))
-                        .alias("_change_type"),
-                    )
-                )
-                change_files = self._write_change_files(
-                    pre.unionByName(post), int(agg["keys"])
-                )
+                change_files = self._capture_cdf(hits, reduced, int(agg["keys"]))
         else:
-            # shuffle resolve — winner set too large to broadcast: union
-            # the (already-reduced) winners with the touched existing rows
-            # and take max-LSN per key in one hash aggregate; both sides
-            # shuffle once on the key, partial agg handles skew
-            existing = (
-                _scan_existing()
-                .withColumn("_op", F.lit("upsert"))
-                .withColumn("_bucket", self._bucket_expr())
-            )
-            both = existing.select(*keys, "_op", *out_cols[len(keys):]).unionByName(
-                reduced.select(*keys, "_op", *out_cols[len(keys):])
-            )
-            payload = F.struct(
-                "_op", *[c for c in out_cols if c not in keys]
-            )
-            resolved = (
-                both.groupBy(*keys)
-                .agg(F.max_by(payload, F.col(LSN_COL)).alias("_p"))
-                .select(*keys, "_p.*")
-                .filter(F.col("_op") != "delete")
-                .drop("_op")
-                .select(*out_cols)
-                .repartition(n_part, "_bucket")
-            )
+            resolved = self._resolve_shuffle(reduced, existing, out_cols)
         mapping = self._write_bucket_files(resolved, snap["schema_id"], pre_bucketed=True)
-        t_write = _time.perf_counter()
+        t_write = time.perf_counter()
 
         # new snapshot: untouched buckets carried over; touched buckets =
         # their carried (winner-free) files + the rewritten output
@@ -2774,47 +2648,85 @@ class LakeTable:
             buckets_meta[b] = list(files)
         for b, files in mapping.items():
             buckets_meta[b] = buckets_meta.get(b, []) + files
-        # per-bucket row counts live in the manifest: touched buckets sum
-        # their files' manifest-recorded counts (just-written files carry
-        # `rows`; carried files keep theirs); untouched buckets carry
-        # their counts forward — the table row count is metadata-only at
-        # any scale
-        prior_rows = snap.get("bucket_rows", {})
-        touched_str = {str(b) for b in touched}
-        bucket_rows = {
-            # see MOR branch note: no eager-default dict.get here
-            b: (prior_rows[b] if b in prior_rows else self._files_rows(files))
-            for b, files in buckets_meta.items()
-            if b not in touched_str
-        }
-        bucket_rows.update(
-            {
-                b: self._files_rows(buckets_meta[b])
-                for b in touched_str
-                if b in buckets_meta
-            }
-        )
-        return self._finish_apply(
-            snap, agg, touched, buckets_meta, bucket_rows, applied,
-            batch_total, count_batch, batch_id, source_watermarks,
-            extra_lineage, applied_segments, t0, t_gate, t_write,
+        return _ModeResult(
+            buckets_meta,
+            self._bucket_rows(snap, buckets_meta, recount={str(b) for b in touched}),
+            t_write,
             carried_files=sum(len(v) for v in carried.values()),
-            change_info=(
-                {
-                    "mode": "cdf",
-                    "files": change_files,
-                    "schema_id": snap["schema_id"],
-                }
-                if change_files is not None
-                else {"mode": "diff"}
-            ),
+            change_files=change_files,
         )
 
-    def _apply_dv(
-        self, reduced, snap, agg, touched, applied, batch_total,
-        count_batch, batch_id, source_watermarks, extra_lineage,
-        applied_segments, t0, t_gate, n_part,
-    ) -> MergeStats:
+    def _resolve_shuffle(
+        self, reduced: DataFrame, existing: DataFrame, out_cols: list[str]
+    ) -> DataFrame:
+        """Shuffle COW resolve — winner set too large to broadcast: union
+        the (already-reduced) winners with the touched existing rows and
+        take max-LSN per key in one hash aggregate; both sides shuffle
+        once on the key, partial agg handles skew."""
+        keys = self.key_cols
+        existing = existing.withColumn("_op", F.lit("upsert"))
+        both = existing.select(*keys, "_op", *out_cols[len(keys):]).unionByName(
+            reduced.select(*keys, "_op", *out_cols[len(keys):])
+        )
+        payload = F.struct("_op", *[c for c in out_cols if c not in keys])
+        return (
+            both.groupBy(*keys)
+            .agg(F.max_by(payload, F.col(LSN_COL)).alias("_p"))
+            .select(*keys, "_p.*")
+            .filter(F.col("_op") != "delete")
+            .drop("_op")
+            .select(*out_cols)
+            .repartition(min(self.snapshot["n_buckets"], 64), "_bucket")
+        )
+
+    def _resolve_partial(
+        self, reduced: DataFrame, existing: DataFrame, out_cols: list[str]
+    ) -> DataFrame:
+        """Partial-image COW resolve: winners may carry nulls meaning
+        "unchanged", so matched existing rows ENRICH the winner
+        (per-column coalesce) instead of being replaced outright —
+        unless the batch contained a delete for the key (_reset: the row
+        was logically re-created, nulls stay null).  One null-safe
+        full-outer key join (sort-merge, both sides shuffle once) — the
+        same exchange budget as the shuffle resolve; a broadcast variant
+        mirroring the non-partial fast path is a straightforward
+        specialization if partial batches are ever the hot path."""
+        keys = self.key_cols
+        nk_cols = [f.name for f in self.schema.fields if f.name not in keys]
+        e = existing.select(
+            *[F.col(k).alias(f"_ek_{i}") for i, k in enumerate(keys)],
+            *[F.col(c).alias(f"_e_{c}") for c in nk_cols],
+            F.col(LSN_COL).alias("_e_lsn"),
+            F.col("_bucket").alias("_e_bucket"),
+            F.lit(1).alias("_ep"),
+        )
+        w = reduced.withColumn("_wp", F.lit(1))
+        j = w.join(e, _key_match([w[k] for k in keys], "_ek_"), "full_outer")
+        present = F.col("_wp").isNotNull()
+        return (
+            j.filter(~present | (F.col("_op") != "delete"))
+            .select(
+                *[
+                    F.when(present, w[k]).otherwise(F.col(f"_ek_{i}")).alias(k)
+                    for i, k in enumerate(keys)
+                ],
+                *[
+                    F.when(~present, F.col(f"_e_{c}"))
+                    .when(F.col("_reset"), w[c])
+                    .otherwise(F.coalesce(w[c], F.col(f"_e_{c}")))
+                    .alias(c)
+                    for c in nk_cols
+                ],
+                F.when(present, w[LSN_COL]).otherwise(F.col("_e_lsn")).alias(LSN_COL),
+                F.when(present, w["_bucket"])
+                .otherwise(F.col("_e_bucket"))
+                .alias("_bucket"),
+            )
+            .select(*out_cols)
+            .repartition(min(self.snapshot["n_buckets"], 64), "_bucket")
+        )
+
+    def _resolve_dv(self, snap, reduced, agg, touched, partial_update) -> _ModeResult:
         """Deletion-vector merge (the Iceberg-v2 / Delta deletion-vector
         shape): superseded row VERSIONS are invalidated *positionally* —
         a per-commit sidecar of ``(file, row_index)`` pairs — and winner
@@ -2844,201 +2756,33 @@ class LakeTable:
         this is the third physical strategy the north rule's
         10^10-event replay needs for update-heavy workloads.
         """
-        import time as _time
-
         from pyspark import StorageLevel
 
-        target = self.schema
         keys = self.key_cols
-        data_cols = [f.name for f in target.fields]
-        nk_cols = [c for c in data_cols if c not in keys]
-        k0 = keys[0]
-        wmin, wmax = agg["_wmin"], agg["_wmax"]
-        null_keys = int(agg["_nullk"]) > 0
-        write_cdf = str(
-            snap.get("properties", {}).get("write_changes", "false")
-        ).lower() == "true"
-
-        # ---- candidate files: the same stats+bloom admission COW file
+        n_keys = int(agg["keys"])
+        write_cdf = self._write_cdf(snap)
+        files = [f for b in touched for f in snap["buckets"].get(str(b), [])]
+        if any(f.get("delta") for f in files):
+            raise ValueError(
+                "deletion-vector merge on a bucket holding MOR "
+                "delta files — compact() first: positional "
+                "deletes cannot see through a latest-per-key fold"
+            )
+        # candidate files: the same stats+bloom admission COW file
         # skipping uses — a file that provably holds no winner key is
-        # never position-scanned
-        probes: list[tuple[int, int]] | None = None
-        probe_cap = int(snap.get("properties", {}).get("bloom_probe_keys", 1024))
-        has_blooms = any(
-            f.get("bloom")
-            for b in touched
-            for f in snap["buckets"].get(str(b), [])
+        # never position-scanned (null winner keys admit every file:
+        # stats are null-blind)
+        admitted = (
+            files
+            if int(agg["_nullk"])
+            else self._admit_files(snap, reduced, agg, touched)[1]
         )
-        if has_blooms and int(agg["keys"]) <= probe_cap and not null_keys:
-            probes = [
-                tuple(int(v) for v in r)
-                for r in reduced.select(*self._bloom_hash_exprs())
-                .distinct()
-                .collect()
-            ]
-        admitted: dict[int, list[str]] = {}
-        n_admitted = 0
-        for b in touched:
-            for f in snap["buckets"].get(str(b), []):
-                if f.get("delta"):
-                    raise ValueError(
-                        "deletion-vector merge on a bucket holding MOR "
-                        "delta files — compact() first: positional "
-                        "deletes cannot see through a latest-per-key fold"
-                    )
-                if not null_keys and (
-                    not self._stats_admit(f, self._pprune(snap, {k0: (wmin, wmax)}))
-                    or self._bloom_reject(self.root, f, probes)
-                ):
-                    continue
-                admitted.setdefault(int(f["schema_id"]), []).append(f["path"])
-                n_admitted += 1
-
-        # ---- position scan: (file, row_index) of every live row whose
-        # key has a strictly-newer winner (the watermark invariant from
-        # the COW broadcast path: winners always out-LSN table rows)
         dv_entry: dict[str, Any] | None = None
         counts: dict[str, int] = {}
         change_files: list[str] | None = None
-        if n_admitted:
-            scans = []
-            # files hold PHYSICAL column names — translate the wanted
-            # logical columns per schema group (identity when unmapped)
-            pm = self._pnames_of(snap) if self._mapped(snap) else {}
-            for sid, paths in sorted(admitted.items()):
-                metas = self._meta_of(snap, sid)
-                want = set(keys) | (set(data_cols) if write_cdf else set())
-                want_p = {pm.get(c, c) for c in want}
-                read_schema = T.StructType(
-                    [
-                        T.StructField(m["pname"], _ATOMIC_TYPES[m["type"]], True)
-                        for m in metas
-                        if m["pname"] in want_p
-                    ]
-                    + [T.StructField(LSN_COL, T.LongType(), True)]
-                )
-                raw = self.spark.read.schema(read_schema).parquet(
-                    *[os.path.join(self.root, p) for p in paths]
-                )
-                have = set(raw.columns)
-                sel = [
-                    F.col(pm.get(k, k)).cast(target[k].dataType).alias(k)
-                    for k in keys
-                ] + [F.col(LSN_COL)]
-                if write_cdf:
-                    sel += [
-                        (
-                            F.col(pm.get(c, c))
-                            if pm.get(c, c) in have
-                            else F.lit(None)
-                        )
-                        .cast(target[c].dataType)
-                        .alias(c)
-                        for c in nk_cols
-                    ]
-                scans.append(
-                    raw.select(
-                        *sel,
-                        F.col("_metadata.file_path").alias("_dv_uri"),
-                        F.col("_metadata.row_index").alias("_dv_pos"),
-                    )
-                )
-            scan = scans[0]
-            for s in scans[1:]:
-                scan = scan.unionByName(s)
-            # uri→rel: data-file rel paths are exactly 4 components (the
-            # invariant the read-side normalization also relies on;
-            # asserted below before any dv entry is committed)
-            scan = scan.withColumn(
-                "_dv_file", F.substring_index(F.col("_dv_uri"), "/", -4)
-            ).drop("_dv_uri")
-            # rows a PRIOR commit already killed must not re-match: their
-            # key's winner would re-emit a duplicate position (harmless)
-            # but, worse, their stale values would pollute the CDF
-            # pre-image and mask a delete-then-reinsert as an update.
-            # One anti-join against the in-scope existing DV — O(dead
-            # rows in the touched buckets), repaid by compaction.
-            prior_entries = [
-                e
-                for e in snap.get("dv", [])
-                if set(e.get("buckets", [])) & touched
-            ]
-            if prior_entries:
-                dead = self.spark.read.parquet(
-                    *[
-                        os.path.join(self.root, p)
-                        for e in prior_entries
-                        for p in e["files"]
-                    ]
-                ).select(
-                    F.col("file").alias("_dv_file"),
-                    F.col("pos").alias("_dv_pos"),
-                )
-                if (
-                    sum(int(e.get("rows", 0)) for e in prior_entries)
-                    <= self.DV_BROADCAST_ROWS
-                ):
-                    dead = F.broadcast(dead)
-                else:
-                    dead = dead.hint("shuffle_hash")
-                scan = scan.join(dead, ["_dv_file", "_dv_pos"], "left_anti")
-            # rows an EQUALITY delete killed are dead the same way prior
-            # dv positions are: re-matching them would duplicate kills
-            # (harmless) and corrupt CDF pre-images (not harmless)
-            eq_prior = [
-                e
-                for e in snap.get("eqdel", [])
-                if set(e.get("buckets", [])) & touched
-            ]
-            if eq_prior:
-                eqs = []
-                pmk = self._pnames_of(snap) if self._mapped(snap) else {}
-                key_schema = T.StructType(
-                    [
-                        T.StructField(pmk.get(f.name, f.name), f.dataType, True)
-                        for f in target.fields
-                        if f.name in set(keys)
-                    ]
-                )
-                for e in eq_prior:
-                    eqs.append(
-                        self.spark.read.schema(key_schema)
-                        .parquet(
-                            *[os.path.join(self.root, p) for p in e["files"]]
-                        )
-                        .select(
-                            *[
-                                F.col(pmk.get(k, k)).alias(f"_eqk_{i}")
-                                for i, k in enumerate(keys)
-                            ],
-                            F.lit(int(e["lsn"])).cast("long").alias("_eq_lsn"),
-                        )
-                    )
-                eq = eqs[0]
-                for q in eqs[1:]:
-                    eq = eq.unionByName(q)
-                if (
-                    sum(int(e.get("rows", 0)) for e in eq_prior)
-                    <= self.DV_BROADCAST_ROWS
-                ):
-                    eq = F.broadcast(eq)
-                econd = scan[LSN_COL] <= F.col("_eq_lsn")
-                for i, k in enumerate(keys):
-                    econd = econd & scan[k].eqNullSafe(F.col(f"_eqk_{i}"))
-                scan = scan.join(eq, econd, "left_anti")
-            wk = reduced.select(
-                *[F.col(k).alias(f"_wk_{i}") for i, k in enumerate(keys)],
-                F.col("_op").alias("_c_op"),
-            )
-            if int(agg["keys"]) <= self._winner_threshold():
-                wk = F.broadcast(wk)
-            cond = None
-            for i, k in enumerate(keys):
-                c = scan[k].eqNullSafe(F.col(f"_wk_{i}"))
-                cond = c if cond is None else (cond & c)
-            hit = scan.join(wk, cond, "inner").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+        if admitted:
+            hit = self._dv_hits(snap, reduced, admitted, touched, write_cdf, n_keys)
+            hit = hit.persist(StorageLevel.MEMORY_AND_DISK)
             counts = {
                 r["_dv_file"]: int(r["n"])
                 for r in hit.groupBy("_dv_file")
@@ -3046,100 +2790,28 @@ class LakeTable:
                 .collect()
             }
             if counts:
-                # the rel-path normalization (both here and in read())
-                # is substring_index(uri, '/', -4): it is exact ONLY
-                # while every data file lives at depth
-                # data/<write>/<bucket>/<file> — fail loudly if the
-                # layout ever changes instead of silently mis-keying
-                bad = [p for p in counts if p.count("/") != 3]
-                if bad:
-                    raise AssertionError(
-                        f"dv path normalization invariant violated: {bad[:3]}"
-                    )
-                out_rel = os.path.join("dv", f"d-{uuid.uuid4().hex}")
-                out_abs = os.path.join(self.root, out_rel)
-                n_dv_rows = sum(counts.values())
-                nfiles = max(1, min(8, n_dv_rows // 2_000_000 + 1))
-                (
-                    hit.select(
-                        F.col("_dv_file").alias("file"),
-                        F.col("_dv_pos").alias("pos"),
-                    )
-                    .repartition(nfiles)
-                    .write.parquet(out_abs)
-                )
-                dv_entry = {
-                    "files": [
-                        os.path.join(out_rel, fn)
-                        for fn in sorted(os.listdir(out_abs))
-                        if fn.endswith(".parquet")
-                    ],
-                    "rows": n_dv_rows,
-                    "buckets": sorted(touched),
-                    # the data files this commit killed rows in — what
-                    # lets the snapshot-diff CDF read O(changed files)
-                    # instead of whole dv-touched buckets
-                    "data_files": sorted(counts),
-                }
+                dv_entry = self._write_dv(hit, counts, touched)
             if write_cdf:
-                pre = hit.select(
-                    *data_cols,
-                    F.col(LSN_COL),
-                    F.when(F.col("_c_op") == "delete", F.lit("delete"))
-                    .otherwise(F.lit("update_preimage"))
-                    .alias("_change_type"),
-                ).localCheckpoint()
-                matched = F.broadcast(
-                    pre.select(
-                        *[F.col(k).alias(f"_mk_{i}") for i, k in enumerate(keys)]
-                    )
-                    .distinct()
-                    .withColumn("_m", F.lit(1))
-                )
-                mcond = None
-                for i, k in enumerate(keys):
-                    c = F.col(k).eqNullSafe(F.col(f"_mk_{i}"))
-                    mcond = c if mcond is None else (mcond & c)
-                post = (
-                    reduced.filter(F.col("_op") != "delete")
-                    .join(matched, mcond, "left")
-                    .select(
-                        *data_cols,
-                        F.col(LSN_COL),
-                        F.when(F.col("_m").isNotNull(), F.lit("update_postimage"))
-                        .otherwise(F.lit("insert"))
-                        .alias("_change_type"),
-                    )
-                )
-                change_files = self._write_change_files(
-                    pre.unionByName(post), int(agg["keys"])
-                )
+                change_files = self._capture_cdf(hit, reduced, n_keys)
             hit.unpersist()
         elif write_cdf:
             # no candidate files at all: every winner is a pure insert
-            change_files = self._write_change_files(
-                reduced.filter(F.col("_op") != "delete").select(
-                    *data_cols,
-                    F.col(LSN_COL),
-                    F.lit("insert").alias("_change_type"),
-                ),
-                int(agg["keys"]),
-            )
+            change_files = self._capture_cdf(None, reduced, n_keys)
 
         # ---- append winner upserts as ordinary base files (deletes
         # contribute positions only — no tombstone rows in DV mode)
         ups = reduced.filter(F.col("_op") != "delete").select(
             *keys,
-            *nk_cols,
+            *[f.name for f in self.schema.fields if f.name not in keys],
             F.col(LSN_COL),
             "_bucket",
         )
         mapping = self._write_bucket_files(
-            ups.repartition(n_part, "_bucket"),
+            ups.repartition(min(snap["n_buckets"], 64), "_bucket"),
             snap["schema_id"],
             pre_bucketed=True,
         )
-        t_write = _time.perf_counter()
+        t_write = time.perf_counter()
 
         buckets_meta = {
             b: [dict(f) for f in files] for b, files in snap["buckets"].items()
@@ -3152,50 +2824,276 @@ class LakeTable:
                         # per-file dead-row counter: compaction's trigger
                         # and the logical-row arithmetic both read it
                         f["dv_rows"] = int(f.get("dv_rows", 0)) + n
-        prior_rows = snap.get("bucket_rows", {})
-        bucket_rows = {
-            b: (prior_rows[b] if b in prior_rows else self._files_rows(files))
-            for b, files in buckets_meta.items()
-        }
         for b, files in mapping.items():
             buckets_meta[b] = buckets_meta.get(b, []) + files
-            bucket_rows[b] = bucket_rows.get(b, 0) + self._files_rows(files)
-        if dv_entry:
-            snap["dv"] = list(snap.get("dv", [])) + [dv_entry]
-        return self._finish_apply(
-            snap, agg, touched, buckets_meta, bucket_rows, applied,
-            batch_total, count_batch, batch_id, source_watermarks,
-            extra_lineage, applied_segments, t0, t_gate, t_write,
-            change_info=(
-                {
-                    "mode": "cdf",
-                    "files": change_files,
-                    "schema_id": snap["schema_id"],
-                }
-                if change_files is not None
-                else {"mode": "diff"}
-            ),
+        return _ModeResult(
+            buckets_meta,
+            self._bucket_rows(snap, buckets_meta, added=mapping),
+            t_write,
+            change_files=change_files,
+            dv_entry=dv_entry,
         )
 
-    def _finish_apply(
-        self, snap, agg, touched, buckets_meta, bucket_rows, applied,
-        batch_total, count_batch, batch_id, source_watermarks,
-        extra_lineage, applied_segments, t0, t_gate, t_write,
-        carried_files: int = 0,
-        change_info: dict | None = None,
-    ) -> MergeStats:
-        """Shared commit tail of apply_prepared (cow + mor branches):
-        snapshot bookkeeping, ledger advance, lineage, atomic commit."""
-        import time as _time
+    def _dv_hits(self, snap, reduced, admitted, touched, write_cdf, n_keys) -> DataFrame:
+        """The DV position scan: ``(_dv_file, _dv_pos)`` of every LIVE row
+        in the admitted files whose key has a winner (strictly newer —
+        the watermark invariant of the COW broadcast path), with the
+        winner's op as ``_c_op`` and, for CDF, the row's data columns."""
+        target = self.schema
+        keys = self.key_cols
+        data_cols = [f.name for f in target.fields]
+        by_sid: dict[int, list[str]] = {}
+        for f in admitted:
+            by_sid.setdefault(int(f["schema_id"]), []).append(f["path"])
+        scans = []
+        # files hold PHYSICAL column names — translate the wanted
+        # logical columns per schema group (identity when unmapped)
+        pm = self._pnames_of(snap) if self._mapped(snap) else {}
+        want_p = {pm.get(c, c) for c in (data_cols if write_cdf else keys)}
+        for sid, paths in sorted(by_sid.items()):
+            read_schema = T.StructType(
+                [
+                    T.StructField(m["pname"], _ATOMIC_TYPES[m["type"]], True)
+                    for m in self._meta_of(snap, sid)
+                    if m["pname"] in want_p
+                ]
+                + [T.StructField(LSN_COL, T.LongType(), True)]
+            )
+            raw = self.spark.read.schema(read_schema).parquet(
+                *[os.path.join(self.root, p) for p in paths]
+            )
+            have = set(raw.columns)
+            sel = [
+                F.col(pm.get(k, k)).cast(target[k].dataType).alias(k)
+                for k in keys
+            ] + [F.col(LSN_COL)]
+            if write_cdf:
+                sel += [
+                    (F.col(pm.get(c, c)) if pm.get(c, c) in have else F.lit(None))
+                    .cast(target[c].dataType)
+                    .alias(c)
+                    for c in data_cols
+                    if c not in keys
+                ]
+            scans.append(
+                raw.select(
+                    *sel,
+                    F.col("_metadata.file_path").alias("_dv_uri"),
+                    F.col("_metadata.row_index").alias("_dv_pos"),
+                )
+            )
+        scan = _union_all(scans)
+        # uri→rel: data-file rel paths are exactly 4 components (the
+        # invariant the read-side normalization also relies on;
+        # asserted in _write_dv before any dv entry is committed)
+        scan = scan.withColumn(
+            "_dv_file", F.substring_index(F.col("_dv_uri"), "/", -4)
+        ).drop("_dv_uri")
+        # rows a PRIOR commit already killed must not re-match: their
+        # key's winner would re-emit a duplicate position (harmless)
+        # but, worse, their stale values would pollute the CDF
+        # pre-image and mask a delete-then-reinsert as an update.
+        # One anti-join against the in-scope existing DV — O(dead
+        # rows in the touched buckets), repaid by compaction.
+        prior = self._scoped(snap, "dv", touched)
+        if prior:
+            scan = scan.join(
+                self._dead_positions(prior), ["_dv_file", "_dv_pos"], "left_anti"
+            )
+        # rows an EQUALITY delete killed are dead the same way prior
+        # dv positions are: re-matching them would duplicate kills
+        # (harmless) and corrupt CDF pre-images (not harmless)
+        eq_prior = self._scoped(snap, "eqdel", touched)
+        if eq_prior:
+            eq = self._eq_delete_keys(snap, eq_prior, target)
+            scan = scan.join(
+                eq,
+                (scan[LSN_COL] <= F.col("_eq_lsn"))
+                & _key_match([scan[k] for k in keys], "_eqk_"),
+                "left_anti",
+            )
+        wk = reduced.select(
+            *[F.col(k).alias(f"_wk_{i}") for i, k in enumerate(keys)],
+            F.col("_op").alias("_c_op"),
+        )
+        if n_keys <= self._winner_threshold():
+            wk = F.broadcast(wk)
+        return scan.join(wk, _key_match([scan[k] for k in keys], "_wk_"), "inner")
 
-        rows_after = sum(bucket_rows.values())
-        snap["bucket_rows"] = bucket_rows
+    def _write_dv(self, hit: DataFrame, counts: dict[str, int], touched: set[int]) -> dict:
+        """Persist one commit's kill list as a ``dv/`` sidecar; returns its
+        manifest entry."""
+        # the rel-path normalization (both in _dv_hits and in read())
+        # is substring_index(uri, '/', -4): it is exact ONLY while every
+        # data file lives at depth data/<write>/<bucket>/<file> — fail
+        # loudly if the layout ever changes instead of silently mis-keying
+        bad = [p for p in counts if p.count("/") != 3]
+        if bad:
+            raise AssertionError(
+                f"dv path normalization invariant violated: {bad[:3]}"
+            )
+        n_dv_rows = sum(counts.values())
+        return {
+            "files": self._write_side_files(
+                hit.select(
+                    F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
+                ),
+                "dv",
+                max(1, min(8, n_dv_rows // 2_000_000 + 1)),
+                physical=False,
+            ),
+            "rows": n_dv_rows,
+            "buckets": sorted(touched),
+            # the data files this commit killed rows in — what lets the
+            # snapshot-diff CDF read O(changed files) instead of whole
+            # dv-touched buckets
+            "data_files": sorted(counts),
+        }
+
+    # -- pieces shared by the mode steps -------------------------------- #
+    def _admit_files(
+        self, snap, reduced, agg, buckets: set[int]
+    ) -> tuple[dict[str, list[dict]], list[dict]]:
+        """Split the files of ``buckets`` by whether they may hold a winner
+        key: ``(kept, admitted)`` where ``kept`` maps bucket → the files
+        whose key-range stats or bloom prove them winner-free.  COW file
+        skipping carries the kept files; the DV position scan reads only
+        the admitted ones.  The caller guarantees no null first-key
+        winner (file stats are null-blind).
+
+        Bloom probes close the range gap: a point-update batch whose keys
+        hash-scatter across the whole keyspace admits EVERY file by
+        range, but each file's bloom rejects keys it provably lacks.
+        Probing costs one small job collecting the winner hash tuples, so
+        it is gated to small batches (property ``bloom_probe_keys``,
+        default 1024) on tables that carry blooms at all."""
+        probes: list[tuple[int, ...]] | None = None
+        probe_cap = int(snap.get("properties", {}).get("bloom_probe_keys", 1024))
+        has_blooms = any(
+            f.get("bloom") for b in buckets for f in snap["buckets"].get(str(b), [])
+        )
+        if has_blooms and int(agg["keys"]) <= probe_cap:
+            probes = [
+                tuple(int(v) for v in r)
+                for r in reduced.select(*self._bloom_hash_exprs()).distinct().collect()
+            ]
+        kp = self._pprune(snap, {self.key_cols[0]: (agg["_wmin"], agg["_wmax"])})
+        kept: dict[str, list[dict]] = {}
+        admitted: list[dict] = []
+        for b in buckets:
+            keep = []
+            for f in snap["buckets"].get(str(b), []):
+                if not self._stats_admit(f, kp) or self._bloom_reject(
+                    self.root, f, probes
+                ):
+                    keep.append(f)
+                else:
+                    admitted.append(f)
+            if keep:
+                kept[str(b)] = keep
+        return kept, admitted
+
+    @staticmethod
+    def _write_cdf(snap: dict[str, Any]) -> bool:
+        return str(
+            snap.get("properties", {}).get("write_changes", "false")
+        ).lower() == "true"
+
+    def _capture_cdf(
+        self, hits: DataFrame | None, reduced: DataFrame, n_keys: int
+    ) -> list[str]:
+        """Write-time CDF of one commit.  ``hits`` are the live pre-image
+        rows of winner keys (data columns, ``_lsn`` and the winner's op as
+        ``_c_op``), or None when no file could hold one.  A pre-image is a
+        ``delete`` or an ``update_preimage`` by its winner's op; a
+        surviving winner is an ``update_postimage`` when its key had a
+        pre-image, else an ``insert``.  Pre-images are winner-bounded, so
+        checkpointing them is cheap and lets the post-image
+        classification reuse them without re-scanning."""
+        keys = self.key_cols
+        data_cols = [f.name for f in self.schema.fields]
+        ups = reduced.filter(F.col("_op") != "delete")
+        if hits is None:
+            return self._write_change_files(
+                ups.select(
+                    *data_cols, F.col(LSN_COL), F.lit("insert").alias("_change_type")
+                ),
+                n_keys,
+            )
+        pre = hits.select(
+            *data_cols,
+            F.col(LSN_COL),
+            F.when(F.col("_c_op") == "delete", F.lit("delete"))
+            .otherwise(F.lit("update_preimage"))
+            .alias("_change_type"),
+        ).localCheckpoint()
+        matched = F.broadcast(
+            pre.select(*[F.col(k).alias(f"_mk_{i}") for i, k in enumerate(keys)])
+            .distinct()
+            .withColumn("_m", F.lit(1))
+        )
+        post = ups.join(
+            matched, _key_match([F.col(k) for k in keys], "_mk_"), "left"
+        ).select(
+            *data_cols,
+            F.col(LSN_COL),
+            F.when(F.col("_m").isNotNull(), F.lit("update_postimage"))
+            .otherwise(F.lit("insert"))
+            .alias("_change_type"),
+        )
+        return self._write_change_files(pre.unionByName(post), n_keys)
+
+    def _bucket_rows(
+        self,
+        snap: dict[str, Any],
+        buckets_meta: dict[str, list[dict]],
+        added: dict[str, list[dict]] | None = None,
+        recount: set[str] = frozenset(),
+    ) -> dict[str, int]:
+        """Per-bucket row counts of the new manifest, metadata-only at any
+        scale: a bucket in ``recount`` (rewritten) sums its files'
+        manifest-recorded counts (just-written files carry ``rows``,
+        carried files keep theirs); every other bucket carries its prior
+        count forward plus the rows of its ``added`` files."""
+        prior = snap.get("bucket_rows", {})
+        added = added or {}
+        rows = {}
+        for b, files in buckets_meta.items():
+            if b in recount:
+                rows[b] = self._files_rows(files)
+            else:
+                # NOT dict.get(b, default): the default is evaluated
+                # eagerly, which would footer-read EVERY table file per
+                # merge — the opposite of metadata-only counting
+                rows[b] = (
+                    prior[b]
+                    if b in prior
+                    else self._files_rows(snap["buckets"].get(b, []))
+                ) + self._files_rows(added.get(b, []))
+        return rows
+
+    def _finish_apply(
+        self, snap, agg, touched, res: _ModeResult, *, batch_total, batch_id,
+        source_watermarks, extra_lineage, applied_segments, t0, t_gate,
+    ) -> MergeStats:
+        """Shared commit tail of apply_prepared (every merge mode):
+        snapshot bookkeeping, ledger advance, lineage, atomic commit."""
+        applied = snap["ledger"]["applied_lsn"]
+        count_batch = batch_total >= 0
+        rows_after = sum(res.bucket_rows.values())
+        snap["bucket_rows"] = res.bucket_rows
         # per-commit change descriptor: "cdf" (stored change files),
         # "none" (structural commit, logically change-free), or "diff"
         # (pre-images not captured — feed falls back to snapshot diff)
-        snap["changes"] = change_info or {"mode": "diff"}
+        snap["changes"] = (
+            {"mode": "cdf", "files": res.change_files, "schema_id": snap["schema_id"]}
+            if res.change_files is not None
+            else {"mode": "diff"}
+        )
+        if res.dv_entry:
+            snap["dv"] = list(snap.get("dv", [])) + [res.dv_entry]
         snap["version"] += 1
-        snap["buckets"] = buckets_meta
+        snap["buckets"] = res.buckets_meta
         snap["ledger"]["applied_lsn"] = max(applied, int(agg["max_lsn"]))
         if source_watermarks:
             snap["ledger"]["source_watermarks"].update(
@@ -3223,8 +3121,8 @@ class LakeTable:
         timings = {
             "gate_agg_sec": round(t_gate - t0, 3),
             # mode-agnostic: COW bucket rewrite or MOR delta append
-            "write_sec": round(t_write - t_gate, 3),
-            "meta_commit_sec": round(_time.perf_counter() - t_write, 3),
+            "write_sec": round(res.t_write - t_gate, 3),
+            "meta_commit_sec": round(time.perf_counter() - res.t_write, 3),
         }
         stats = MergeStats(
             batch_rows=batch_total if count_batch else int(agg["rows"]),
@@ -3238,10 +3136,10 @@ class LakeTable:
                 batch_total - int(agg["rows"]) if count_batch else -1
             ),
             timings=timings,
-            carried_files=carried_files,
+            carried_files=res.carried_files,
         )
         lineage = {
-            "at": round(_time.time(), 3),
+            "at": round(time.time(), 3),
             "batch_id": batch_id or uuid.uuid4().hex,
             # explicit operation kind: history() must not infer it from a
             # USER-supplied batch_id (e.g. 'compact-2026-08' is a merge)
@@ -3252,7 +3150,7 @@ class LakeTable:
             "touched_buckets": sorted(touched),
             "deletes": stats.deletes,
             "skipped_already_applied": stats.skipped_already_applied,
-            "carried_files": carried_files,
+            "carried_files": res.carried_files,
             "timings": timings,
         }
         if extra_lineage:
@@ -3297,11 +3195,15 @@ class LakeTable:
         """Row count from parquet footers only — metadata-scale, no scan."""
         return sum(self._files_rows(files) for files in buckets_meta.values())
 
-    def row_count(self) -> int:
-        snap = self.snapshot
+    def _physical_rows(self, snap: dict[str, Any]) -> int:
+        """Physical row count of a snapshot: manifest ``bucket_rows`` when
+        complete, else parquet footers."""
         if "bucket_rows" in snap and set(snap["bucket_rows"]) == set(snap["buckets"]):
             return sum(snap["bucket_rows"].values())
         return self._count_rows(snap["buckets"])
+
+    def row_count(self) -> int:
+        return self._physical_rows(self.snapshot)
 
     def logical_row_count(self, version: int | None = None) -> int:
         """Exact LIVE row count — metadata-only whenever the snapshot
@@ -3336,12 +3238,7 @@ class LakeTable:
         )
         if has_deltas or snap.get("eqdel"):
             return self.read(version=version).count()
-        physical = (
-            sum(snap["bucket_rows"].values())
-            if "bucket_rows" in snap
-            and set(snap["bucket_rows"]) == set(snap["buckets"])
-            else self._count_rows(snap["buckets"])
-        )
+        physical = self._physical_rows(snap)
         dv_dead = sum(
             int(f.get("dv_rows", 0))
             for files in snap["buckets"].values()
@@ -3422,8 +3319,7 @@ class LakeTable:
         def _dv_entries(snap: dict, b) -> dict[tuple, dict]:
             return {
                 tuple(e["files"]): e
-                for e in snap.get("dv", [])
-                if int(b) in set(e.get("buckets", []))
+                for e in LakeTable._scoped(snap, "dv", {int(b)})
             }
 
         def _eq_sig(snap: dict, b) -> tuple:
@@ -3433,8 +3329,7 @@ class LakeTable:
             return tuple(
                 sorted(
                     (tuple(e["files"]), int(e["lsn"]))
-                    for e in snap.get("eqdel", [])
-                    if int(b) in set(e.get("buckets", []))
+                    for e in LakeTable._scoped(snap, "eqdel", {int(b)})
                 )
             )
 
@@ -3569,10 +3464,7 @@ class LakeTable:
             return empty.withColumn(
                 "_change_type", F.lit(None).cast("string")
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts)
 
     def table_changes(
         self,
@@ -3669,10 +3561,7 @@ class LakeTable:
             *[F.col(k).alias(f"_kb_{i}") for i, k in enumerate(keys)],
             F.struct(*nonkey, LSN_COL).alias("_b"),
         )
-        cond = None
-        for i in range(len(keys)):
-            c = F.col(f"_ka_{i}").eqNullSafe(F.col(f"_kb_{i}"))
-            cond = c if cond is None else (cond & c)
+        cond = _key_match([F.col(f"_ka_{i}") for i in range(len(keys))], "_kb_")
         def _ev(kind: str, img: F.Column) -> F.Column:
             return F.struct(F.lit(kind).alias("_t"), img.alias("_img"))
 
@@ -3944,23 +3833,9 @@ class LakeTable:
         n = int(agg["n"])
         if n == 0:
             return -1
-        out_rel = os.path.join("eqdel", f"e-{uuid.uuid4().hex}")
-        out_abs = os.path.join(self.root, out_rel)
-        staged_out = staged
-        if self._mapped(self.snapshot):
-            # key files live in PHYSICAL name space like data files
-            pmk = self._pnames_of(self.snapshot)
-            staged_out = staged.select(
-                *[F.col(k).alias(pmk.get(k, k)) for k in keys]
-            )
-        staged_out.repartition(max(1, min(8, n // 4_000_000 + 1))).write.parquet(
-            out_abs
+        files = self._write_side_files(
+            staged, "eqdel", max(1, min(8, n // 4_000_000 + 1))
         )
-        files = [
-            os.path.join(out_rel, fn)
-            for fn in sorted(os.listdir(out_abs))
-            if fn.endswith(".parquet")
-        ]
         retries = int(
             self.snapshot.get("properties", {}).get("commit_retries", 3)
         )
@@ -4179,14 +4054,8 @@ class LakeTable:
         fall back to per-file manifest row counts — a missing entry must
         not count as 0 or the bin-packing partition count collapses to 1
         (one giant single-task file)."""
-        bucket_rows = snap.get("bucket_rows", {})
-        total = 0
-        for b in todo:
-            if str(b) in bucket_rows:
-                total += int(bucket_rows[str(b)])
-            else:
-                total += self._files_rows(snap["buckets"].get(str(b), []))
-        return total
+        todo_meta = {str(b): snap["buckets"].get(str(b), []) for b in todo}
+        return sum(self._bucket_rows(snap, todo_meta).values())
 
     def rollback_to(self, version: int) -> int:
         """Roll the table back to a retained snapshot (Iceberg
@@ -4619,14 +4488,25 @@ class LakeTable:
         # the current one — otherwise vacuum breaks time travel to
         # versions expire_snapshots has intentionally kept
         live: set[str] = set()
+        # sidecars ride the same liveness rule: a deletion-vector or
+        # equality-delete parquet is reclaimable once no retained
+        # snapshot's dv/eqdel list references it (compaction retired it
+        # + expire_snapshots passed); a write-time CDF file once every
+        # snapshot whose change descriptor references it has been
+        # expired (the feed's lookback horizon has passed it)
+        live_side: set[str] = set()
         for fn in os.listdir(self._meta_dir):
             if not _re.fullmatch(r"snap-\d{8}\.json", fn):
                 continue
             with open(os.path.join(self._meta_dir, fn)) as fh:
-                # resolve_manifest: sharded manifests reference their
-                # bucket inventory out-of-line
-                manifest = resolve_manifest(self.root, json.load(fh))
-            for files in manifest.get("buckets", {}).values():
+                snap_j = json.load(fh)
+            for field in ("dv", "eqdel"):
+                for e in snap_j.get(field, []):
+                    live_side.update(e.get("files", []))
+            live_side.update((snap_j.get("changes") or {}).get("files") or [])
+            # resolve_manifest: sharded manifests reference their
+            # bucket inventory out-of-line
+            for files in resolve_manifest(self.root, snap_j).get("buckets", {}).values():
                 live.update(fobj["path"] for fobj in files)
         removed = 0
         for dirpath, _dirnames, filenames in os.walk(self._data_dir):
@@ -4643,63 +4523,23 @@ class LakeTable:
         for dirpath, dirnames, filenames in list(os.walk(self._data_dir, topdown=False)):
             if not dirnames and not filenames and dirpath != self._data_dir:
                 os.rmdir(dirpath)
-        # deletion-vector sidecars ride the same liveness rule: a dv
-        # parquet is reclaimable once no retained snapshot's dv list
-        # references it (compaction retired it + expire_snapshots passed)
-        live_dv: set[str] = set()
-        for fn in os.listdir(self._meta_dir):
-            if not _re.fullmatch(r"snap-\d{8}\.json", fn):
+        for sub in ("dv", "eqdel", "changes"):
+            side_dir = os.path.join(self.root, sub)
+            if not os.path.isdir(side_dir):
                 continue
-            with open(os.path.join(self._meta_dir, fn)) as fh:
-                snap_j = json.load(fh)
-            for field in ("dv", "eqdel"):
-                for e in snap_j.get(field, []):
-                    live_dv.update(e.get("files", []))
-        for sub in ("dv", "eqdel"):
-            dv_dir = os.path.join(self.root, sub)
-            if not os.path.isdir(dv_dir):
-                continue
-            for dirpath, _dirnames, filenames in os.walk(dv_dir):
+            for dirpath, _dirnames, filenames in os.walk(side_dir):
                 for fn in filenames:
                     full = os.path.join(dirpath, fn)
                     rel = os.path.relpath(full, self.root)
-                    if rel not in live_dv and fn.endswith(".parquet"):
+                    if rel not in live_side and fn.endswith(".parquet"):
                         os.remove(full)
                         removed += 1
             for dirpath, dirnames, filenames in list(
-                os.walk(dv_dir, topdown=False)
-            ):
-                if dirpath != dv_dir and not dirnames and all(
-                    fn == "_SUCCESS" or fn.startswith(".") for fn in filenames
-                ):
-                    for fn in filenames:
-                        os.remove(os.path.join(dirpath, fn))
-                    os.rmdir(dirpath)
-        # write-time CDF files ride the same liveness rule: a change file
-        # is reclaimable once every snapshot whose descriptor references
-        # it has been expired (the feed's lookback horizon has passed it)
-        live_ch: set[str] = set()
-        for fn in os.listdir(self._meta_dir):
-            if not _re.fullmatch(r"snap-\d{8}\.json", fn):
-                continue
-            with open(os.path.join(self._meta_dir, fn)) as fh:
-                d = json.load(fh).get("changes") or {}
-            live_ch.update(d.get("files") or [])
-        ch_dir = os.path.join(self.root, "changes")
-        if os.path.isdir(ch_dir):
-            for dirpath, _dirnames, filenames in os.walk(ch_dir):
-                for fn in filenames:
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(full, self.root)
-                    if rel not in live_ch and fn.endswith(".parquet"):
-                        os.remove(full)
-                        removed += 1
-            for dirpath, dirnames, filenames in list(
-                os.walk(ch_dir, topdown=False)
+                os.walk(side_dir, topdown=False)
             ):
                 # a commit dir whose every parquet was reclaimed keeps
                 # only writer markers (_SUCCESS, .crc) — drop those too
-                if dirpath != ch_dir and not dirnames and all(
+                if dirpath != side_dir and not dirnames and all(
                     fn == "_SUCCESS" or fn.startswith(".") for fn in filenames
                 ):
                     for fn in filenames:

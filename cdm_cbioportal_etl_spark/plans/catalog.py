@@ -3506,7 +3506,7 @@ def cdc_repos_replay_dv(spark, sf_dir):
     """North-rule flagship in deletion-vector mode: superseded rows are
     killed positionally (per-commit (file, row_index) sidecars), winners
     append as plain files — MOR's write cost with a fold-free read
-    (lake/table.py::_apply_dv).  Final state must hash-match the same
+    (lake/table.py::_resolve_dv).  Final state must hash-match the same
     DuckDB oracle as the copy-on-write replay."""
     from cdm_cbioportal_etl_spark.cdc import CdcReplayer
     from cdm_cbioportal_etl_spark.cdc.generator import REPOS_SCHEMA

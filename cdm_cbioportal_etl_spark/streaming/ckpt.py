@@ -17,14 +17,16 @@ real stream progress happened even if the sink saw nothing foldable.
 Checkpoint locations may be plain paths or ``file:`` URIs (``local_path``
 maps both to a local path, as the DataSource stream writer does for its
 stream id).  Any other scheme cannot be listed from here: the cursor
-then reads None and a drain loop stops after one micro-batch, so
-``offsets_cursor`` warns instead of degrading silently.
+then reads None, ``offsets_cursor`` warns, and ``drain`` falls back to
+the query's own progress report to decide whether a pass moved the
+stream.
 """
 
 from __future__ import annotations
 
 import os
 import warnings
+from typing import Any, Callable
 
 
 def local_path(location: str) -> str:
@@ -65,8 +67,8 @@ def offsets_cursor(checkpoint_dir: str) -> str | None:
     if "://" in checkpoint_dir and not checkpoint_dir.startswith("file:"):
         warnings.warn(
             f"checkpoint {checkpoint_dir!r} is not on the local filesystem: "
-            "its progress cursor cannot be read, so a bounded drain stops "
-            "after one micro-batch",
+            "its progress cursor cannot be read, so a bounded drain judges "
+            "progress from the query's progress report instead",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -78,3 +80,42 @@ def offsets_cursor(checkpoint_dir: str) -> str | None:
     o = f"{off[0]}:{off[1]}" if off else ""
     c = com[0] if com else ""
     return f"{o}|c:{c}"
+
+
+def _pass_progressed(query: Any) -> bool:
+    """True when a finished streaming pass ran a micro-batch that moved
+    some source's offset (its ``recentProgress`` report)."""
+    return any(
+        src.endOffset is not None and src.endOffset != src.startOffset
+        for p in query.recentProgress
+        for src in p.sources
+    )
+
+
+def drain(start_pass: Callable[[], Any], checkpoint_dir: str) -> None:
+    """Drain a stream to its head as a loop of single-batch passes.
+
+    ``start_pass`` starts ONE Trigger.Once query on ``checkpoint_dir``.
+    Trigger.Once, not availableNow: Spark's Python DataSource stream
+    wrapper (PythonMicroBatchStream) does not implement
+    SupportsTriggerAvailableNow, so availableNow would fall back to
+    single-batch execution WITH a per-drain warning and an "uncommitted
+    batch" caveat.  Once IS single-batch, declared honestly
+    (warning-free); this loop supplies the drain-to-head semantics,
+    including re-finishing an uncommitted batch left by a crash.
+
+    The loop stops when a pass leaves the checkpoint's offsets cursor
+    unchanged (no new micro-batch planned: caught up).  When the cursor
+    is unreadable both before and after a pass (a non-local checkpoint),
+    the pass's own progress report decides instead, so such a drain
+    still reaches the head rather than stopping after one batch."""
+    while True:
+        before = offsets_cursor(checkpoint_dir)
+        query = start_pass()
+        query.awaitTermination()
+        after = offsets_cursor(checkpoint_dir)
+        if before is None and after is None:
+            if not _pass_progressed(query):
+                return
+        elif after == before:
+            return

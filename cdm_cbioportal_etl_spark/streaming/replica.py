@@ -107,6 +107,15 @@ class CdfReplicaMaintainer:
             extra_lineage={"operation": "replica_sync", "epoch": int(epoch_id)},
         )
 
+    def _start(self, **trigger):
+        return (
+            self._load()
+            .writeStream.foreachBatch(self._apply)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(**trigger)
+            .start()
+        )
+
     # ------------------------------------------------------------------ #
     def propagate_schema(self) -> None:
         """Replay source rename/drop/add history since the last synced
@@ -122,33 +131,13 @@ class CdfReplicaMaintainer:
         (ckpt.offsets_cursor — the replica's synced version alone would
         under-drain when an admitted window's commits all yield empty
         batches).  Returns the replica's synced version."""
-        from .ckpt import offsets_cursor
+        from .ckpt import drain
 
-        while True:
-            before = offsets_cursor(self.checkpoint_dir)
-            # trigger(once), not availableNow: the Python DataSource
-            # stream wrapper lacks SupportsTriggerAvailableNow, so
-            # availableNow degraded to single-batch WITH a warning; Once
-            # is the same single batch declared honestly, and the cursor
-            # loop drains to head (see views.py for the full note)
-            q = (
-                self._load()
-                .writeStream.foreachBatch(self._apply)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .trigger(once=True)
-                .start()
-            )
-            q.awaitTermination()
-            if offsets_cursor(self.checkpoint_dir) == before:
-                break  # no new micro-batch planned: caught up
+        # one Trigger.Once pass per loop step (ckpt.drain: why not
+        # availableNow)
+        drain(lambda: self._start(once=True), self.checkpoint_dir)
         return self.replica.synced_version()
 
     def start(self, processing_time: str = "0 seconds"):
         """Continuous tail; returns the StreamingQuery."""
-        return (
-            self._load()
-            .writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
+        return self._start(processingTime=processing_time)

@@ -97,6 +97,15 @@ class CdfViewMaintainer:
     def _apply(self, batch_df, epoch_id: int) -> None:
         self.last_batch = self.view.apply_changes(batch_df)
 
+    def _start(self, **trigger):
+        return (
+            self._load()
+            .writeStream.foreachBatch(self._apply)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(**trigger)
+            .start()
+        )
+
     # ------------------------------------------------------------------ #
     def run_available(self) -> dict[str, Any] | None:
         """Drain every change committed so far, then stop — the
@@ -107,39 +116,15 @@ class CdfViewMaintainer:
         (ckpt.offsets_cursor) — sink state alone would under-drain when
         an admitted window folds to nothing.  Returns the last batch's
         stats FROM THIS CALL (None if no batch ran)."""
-        from .ckpt import offsets_cursor
+        from .ckpt import drain
 
         self.last_batch = None  # stats must describe THIS call only
-        while True:
-            before = offsets_cursor(self.checkpoint_dir)
-            # trigger(once): Spark's Python DataSource stream wrapper
-            # (PythonMicroBatchStream) does not implement
-            # SupportsTriggerAvailableNow, so availableNow would fall
-            # back to single-batch execution WITH a per-drain warning
-            # and an "uncommitted batch" caveat.  Once IS single-batch,
-            # declared honestly (warning-free); the cursor loop below
-            # supplies the drain-to-head semantics, including
-            # re-finishing an uncommitted batch left by a crash
-            # (tests/test_streaming_views.py pins that case).
-            q = (
-                self._load()
-                .writeStream.foreachBatch(self._apply)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .trigger(once=True)
-                .start()
-            )
-            q.awaitTermination()
-            if offsets_cursor(self.checkpoint_dir) == before:
-                break  # no new micro-batch planned: caught up
+        # one Trigger.Once pass per loop step (ckpt.drain: why not
+        # availableNow)
+        drain(lambda: self._start(once=True), self.checkpoint_dir)
         return self.last_batch
 
     def start(self, processing_time: str = "0 seconds"):
         """Continuous tail: keep folding new commits as they land.
         Returns the StreamingQuery (caller stops it)."""
-        return (
-            self._load()
-            .writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
+        return self._start(processingTime=processing_time)

@@ -1,22 +1,12 @@
-"""MergeBackend seam: LakeTable satisfies the protocol; the Iceberg
-implementation runs the same replay flow when the runtime jars exist
-(skipped in jar-less environments — the seam itself is still exercised
-through the protocol-typed driver below)."""
+"""MergeBackend seam: LakeTable satisfies the protocol, driven through
+the protocol surface only; plus the winner reduction every backend
+relies on (``LakeTable.prepare_batch``, shuffle strategy)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cdm_cbioportal_etl_spark.lake import (
-    IcebergBackend,
-    LakeTable,
-    MergeBackend,
-    ParquetMergeBackend,
-    iceberg_available,
-    reduce_winners,
-)
+from cdm_cbioportal_etl_spark.lake import LakeTable, MergeBackend
 
 SCHEMA = T.StructType(
     [
@@ -72,70 +62,47 @@ def test_laketable_satisfies_backend_protocol(spark, tmp_path):
     _drive(spark, table)
 
 
-def test_parquet_backend_same_flow(spark, tmp_path):
-    """Conformance: a SECOND, structurally different protocol
-    implementation (versioned parquet + pointer file, full-outer-join
-    MERGE plan) passes the identical replay flow — the seam is pinned to
-    the protocol, not to LakeTable.  This is the in-sandbox stand-in for
-    the jar-gated Iceberg leg (vendoring attempted round 4: no DNS)."""
-    be = ParquetMergeBackend.create(
-        spark, str(tmp_path / "pq"), SCHEMA, key_cols=["k"], n_buckets=4
+def _table(spark, tmp_path):
+    return LakeTable.create(
+        spark, str(tmp_path / "rw"), SCHEMA, key_cols=["k"], n_buckets=4
     )
-    _drive(spark, be)
 
 
-def test_parquet_backend_resume_from_pointer(spark, tmp_path):
-    """Crash-resume through the pointer file: a fresh handle over the
-    same root sees the committed state and skips redelivered batches."""
-    root = str(tmp_path / "pqr")
-    be = ParquetMergeBackend.create(spark, root, SCHEMA, key_cols=["k"])
-    b1 = spark.createDataFrame(
-        [("a", "v1", "upsert", 1)], "k string, v string, op string, lsn long"
-    )
-    be.merge(b1)
-    fresh = ParquetMergeBackend(spark, root, ["k"], SCHEMA)
-    assert fresh.applied_lsn() == 1
-    assert fresh.merge(b1)["skipped"] is True
-    assert fresh.row_count() == 1
-
-
-def test_iceberg_backend_same_flow(spark, tmp_path):
-    if not iceberg_available(spark):
-        pytest.skip(
-            "iceberg-spark-runtime jars / catalog not configured; vendoring "
-            "was attempted (round 4) and is impossible here — no external "
-            "DNS (repo1.maven.org unresolvable), no ivy cache, no jar on "
-            "disk.  Conformance is covered non-skipped by the LakeTable + "
-            "ParquetMergeBackend legs above."
-        )
-    be = IcebergBackend.create(
-        spark, "local.db.seam_test", SCHEMA, key_cols=["k"], n_buckets=4
-    )
-    try:
-        _drive(spark, be)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS local.db.seam_test")
-
-
-def test_reduce_winners_latest_lsn_wins(spark):
+def test_reduce_winners_latest_lsn_wins(spark, tmp_path):
     batch = spark.createDataFrame(
         [("a", "old", "upsert", 1), ("a", "new", "delete", 9), ("b", "x", "upsert", 2)],
         "k string, v string, op string, lsn long",
     )
-    out = {r.k: (r.v, r.op, r.lsn) for r in reduce_winners(batch, ["k"]).collect()}
+    reduced = _table(spark, tmp_path).prepare_batch(batch, strategy="shuffle")
+    out = {r.k: (r.v, r._op, r._lsn) for r in reduced.collect()}
     assert out == {"a": ("new", "delete", 9), "b": ("x", "upsert", 2)}
 
 
-def test_reduce_winners_plan_combines_map_side(spark):
-    """Scale shape: partial_max_by BEFORE the one key exchange (hot keys
-    pre-reduce on the map side) and no window — the plan that survives
-    skew at 10^10 events.  (max_by over a struct plans as SortAggregate
-    with per-partition local sorts; the partial/final split is the
-    property that matters, not the aggregate's physical flavor.)"""
+def test_reduce_winners_plan_combines_map_side(spark, tmp_path, monkeypatch):
+    """Scale shape of the shuffle reduction: partial_max_by BEFORE the
+    one key exchange (hot keys pre-reduce on the map side) and no window
+    — the plan that survives skew at 10^10 events.  (max_by over a
+    struct plans as SortAggregate with per-partition local sorts; the
+    partial/final split is the property that matters, not the
+    aggregate's physical flavor.)  prepare_batch materializes its result
+    with localCheckpoint, so the plan is read off the frame it
+    checkpoints."""
     batch = spark.createDataFrame(
         [("a", "x", "upsert", 1)], "k string, v string, op string, lsn long"
     )
-    plan = reduce_winners(batch, ["k"])._jdf.queryExecution().executedPlan().toString()
+    checkpointed = []
+    real = type(batch).localCheckpoint
+
+    def spy(self, *a, **k):
+        checkpointed.append(self)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(type(batch), "localCheckpoint", spy)
+    _table(spark, tmp_path).prepare_batch(batch, strategy="shuffle")
+    # a fresh projection plans anew: the checkpointed frame's own plan
+    # has run, so AQE would print its final AND initial plan
+    fresh = checkpointed[-1].select("*")
+    plan = fresh._jdf.queryExecution().executedPlan().toString()
     assert "partial_max_by" in plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Window" not in plan

@@ -215,3 +215,42 @@ def test_bounded_drains_catch_up_to_head(spark, rig):
     m.run_available()
     assert view.consumed_version() == src.snapshot["version"]
     assert _view_state(view) == _recompute(src)
+
+
+def test_unreadable_cursor_drains_on_query_progress(spark, rig, monkeypatch):
+    """A checkpoint whose offsets cursor cannot be read (a non-local
+    location reads None before and after every pass) still drains to
+    head, one bounded micro-batch per pass, and still terminates: the
+    loop falls back to each pass's own progress report."""
+    from cdm_cbioportal_etl_spark.streaming import ckpt
+
+    src, view, _ = rig
+    for i in range(3):
+        src.merge(
+            _ev(spark, [(200 + i, "upsert", 300 + i, "g" + str(i % 2), i)]),
+            batch_id=f"nc{i}",
+        )
+    monkeypatch.setattr(ckpt, "offsets_cursor", lambda _dir: None)
+    passes = []
+    real_drain = ckpt.drain
+
+    def counting_drain(start_pass, checkpoint_dir):
+        def counted():
+            passes.append(1)
+            return start_pass()
+
+        real_drain(counted, checkpoint_dir)
+
+    monkeypatch.setattr(ckpt, "drain", counting_drain)
+    m = CdfViewMaintainer(
+        spark, src.root, view, src.root + "-ckpt-nocursor",
+        max_commits_per_drain=1,
+    )
+    start = view.consumed_version()
+    m.run_available()
+    head = src.snapshot["version"]
+    assert view.consumed_version() == head
+    assert _view_state(view) == _recompute(src)
+    # one pass per source commit past the view's start, plus the final
+    # pass that finds nothing new
+    assert len(passes) == (head - start) + 1
