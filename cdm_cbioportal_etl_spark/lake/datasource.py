@@ -15,9 +15,12 @@ importing this package at the call site beyond one registration call:
 
 Architecture (why this is NOT the slow Python path):
 
-- **Planning is metadata-only and driver-side.**  The lake's manifests
-  are plain JSON (`_meta/snap-*.json` + ref pointers), so `schema()` /
-  `partitions()` never need a SparkSession or a data scan.  Pushed-down
+- **Planning is metadata-only, driver-side and session-free.**  Snapshots
+  resolve through a `LakeTable(None, root, ref)` handle — the table's
+  one implementation of its metadata protocol (ref pointers, manifests,
+  shards, ancestry, TIMESTAMP AS OF), pure file I/O without a session —
+  so `schema()` / `partitions()` never need a SparkSession or a data
+  scan.  Pushed-down
   filters (`pushFilters`, Spark 4.1) prune data FILES against the same
   per-file min/max stats the native `LakeTable.read()` path uses
   (`LakeTable._stats_admit`) — every filter is also returned to Spark,
@@ -60,9 +63,8 @@ schema-identical to the native `LakeTable.files()`/`history()`,
 `version`/`timestamp`/`ref`, which the native inspection methods
 (current-snapshot-only) do not.
 
-Deliberately read-only: writes go through `LakeTable.merge()` —
-an exactly-once JVM shuffle job; funneling write data through Python
-workers would be the anti-scale path, so no `writer()` is provided.
+Writes: `writer()` / `streamWriter()` are the distributed MOR delta
+append of lake/writer.py; merges go through `LakeTable.merge()`.
 
 Streaming (`mode=cdf`) serves the table's write-time change files
 (Delta CDF's `_change_data` shape, see `_write_change_files`): offsets
@@ -79,10 +81,9 @@ registration is Spark's own datasource registry.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -102,10 +103,13 @@ from .table import (
     LSN_COL,
     DELETED_COL,
     LakeTable,
+    files_meta_rows,
+    history_meta_rows,
     resolve_manifest,
     schema_from_json,
     schema_pnames,
 )
+from .txn import LakeCatalog
 from .xxh64_vec import pmod_vec, xxhash64_arrow
 
 FORMAT_NAME = "laketable"
@@ -114,90 +118,42 @@ COMMIT_VERSION_COL = "_commit_version"
 
 
 # --------------------------------------------------------------------- #
-# driver-side manifest access (pure file I/O — no SparkSession)
+# snapshot resolution: the table's own metadata protocol, session-free
 # --------------------------------------------------------------------- #
-def _read_ref_version(root: str, ref: str) -> int:
-    meta = os.path.join(root, "_meta")
-    if ref == "main":
-        with open(os.path.join(meta, "VERSION")) as fh:
-            return int(fh.read().strip())
-    with open(os.path.join(meta, "refs", f"{ref}.json")) as fh:
-        return int(json.load(fh)["version"])
-
-
-def _snapshot_at(
-    root: str, version: int, resolve: bool = True
-) -> dict[str, Any]:
-    path = os.path.join(root, "_meta", f"snap-{version:08d}.json")
-    if not os.path.exists(path):
-        raise ValueError(f"no snapshot version {version} at {root}")
-    with open(path) as fh:
-        snap = json.load(fh)
-    # resolve_manifest is pure file I/O (sharded manifests keep the
-    # bucket inventory out-of-line) — planning stays session-free.
-    # resolve=False for walks that read only scalar fields (parent,
-    # committed_at, changes): resolving per-ancestor would cost
-    # O(history × live files) on sharded tables.
-    return resolve_manifest(root, snap) if resolve else snap
-
-
-def _ancestry(
-    root: str, head: int, resolve: bool = False
-) -> Iterator[tuple[int, dict[str, Any]]]:
-    """(version, snapshot) newest-first along the parent chain.
-    Unresolved by default — pass resolve=True only when the consumer
-    reads `buckets`."""
-    v: int | None = head
-    while v is not None:
-        try:
-            s = _snapshot_at(root, v, resolve=resolve)
-        except ValueError:
-            return
-        yield v, s
-        v = s.get("parent", v - 1 if v > 0 else None)
-
-
+# Ref pointers, snapshot manifests, shard resolution, ancestry and
+# TIMESTAMP AS OF have ONE implementation, on LakeTable (and LakeCatalog
+# for catalog cuts).  A handle built with no SparkSession serves all of
+# them as pure file I/O, so planning stays driver-side and session-free.
 def _resolve_catalog(options: dict) -> tuple[str, int]:
     """Resolve (table root, pinned version) through a LakeCatalog
     (lake/txn.py): ``option("catalog", <catalog root>)`` +
     ``option("table", <name>)``, with the cut picked by
-    ``catalog_version`` / ``catalog_tag`` (default: head).  Pure-python
-    JSON reads — the datasource stays SparkSession-free — so a registry
-    reader gets the same cross-table-consistent pins as engine readers."""
-    meta = os.path.join(os.path.abspath(options["catalog"]), "_catalog")
+    ``catalog_version`` / ``catalog_tag`` (default: head) — the same
+    cross-table-consistent pins engine readers get."""
     name = options.get("table")
     if not name:
         raise ValueError("laketable: option 'table' is required with 'catalog'")
-    if not os.path.isfile(os.path.join(meta, "VERSION")):
+    if not LakeCatalog.exists(options["catalog"]):
         raise ValueError(
             f"laketable: no catalog at {options['catalog']} (missing "
             "_catalog/VERSION)"
         )
-    with open(os.path.join(meta, "VERSION")) as fh:
-        head = int(fh.read().strip())
-
-    def _cat(v: int) -> dict:
-        p = os.path.join(meta, f"cat-{int(v):08d}.json")
-        try:
-            with open(p) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(
-                f"laketable: no catalog version {v} (expired?)"
-            ) from None
-
+    cat = LakeCatalog(None, os.path.abspath(options["catalog"]))
+    v = options.get("catalog_version")
     if "catalog_tag" in options:
-        tags = _cat(head).get("tags", {})
+        tags = cat.tags()
         tag = options["catalog_tag"]
         if tag not in tags:
             raise ValueError(
                 f"laketable: no catalog tag {tag!r} (have: {sorted(tags)})"
             )
-        snap = _cat(int(tags[tag]))
-    elif "catalog_version" in options:
-        snap = _cat(int(options["catalog_version"]))
-    else:
-        snap = _cat(head)
+        v = tags[tag]
+    try:
+        snap = cat.snapshot if v is None else cat.snapshot_at(int(v))
+    except ValueError:
+        raise ValueError(
+            f"laketable: no catalog version {v} (expired?)"
+        ) from None
     entry = snap["tables"].get(name)
     if entry is None:
         raise ValueError(
@@ -208,33 +164,25 @@ def _resolve_catalog(options: dict) -> tuple[str, int]:
 
 
 def _load_snapshot(options: dict) -> tuple[str, dict[str, Any]]:
+    """(table root, resolved snapshot) selected by the options: a catalog
+    pin, else the ``path`` table's ``version``, ``timestamp`` (in the
+    ``ref``'s ancestry) or ``ref`` head."""
     if options.get("catalog"):
         root, version = _resolve_catalog(options)
-        return root, _snapshot_at(root, version)
+        return root, LakeTable(None, root).snapshot_at(version)
     root = options.get("path")
     if not root:
         raise ValueError("laketable: option 'path' is required")
     root = os.path.abspath(root)
-    if not os.path.isdir(os.path.join(root, "_meta")):
+    if not LakeTable.exists(root):
         raise ValueError(f"laketable: no lake table at {root} (missing _meta/)")
-    ref = options.get("ref", "main")
+    t = LakeTable(None, root, ref=options.get("ref", "main"))
     if "version" in options:
-        version = int(options["version"])
-    elif "timestamp" in options:
+        return root, t.snapshot_at(int(options["version"]))
+    if "timestamp" in options:
         ts = float(options["timestamp"])
-        version = None
-        for v, s in _ancestry(root, _read_ref_version(root, ref)):
-            at = s.get("committed_at")
-            if at is None or at <= ts:
-                version = v
-                break
-        if version is None:
-            raise ValueError(
-                f"laketable: no retained snapshot at or before {ts}"
-            )
-    else:
-        version = _read_ref_version(root, ref)
-    return root, _snapshot_at(root, version)
+        return root, t.snapshot_at(t.version_at_timestamp(ts))
+    return root, t.snapshot
 
 
 def _table_struct(snap: dict[str, Any]) -> T.StructType:
@@ -831,35 +779,25 @@ _META_SCHEMAS: dict[str, T.StructType] = {
 
 
 def _meta_rows(root: str, snap: dict[str, Any], kind: str) -> list[tuple]:
-    """Rows for a metadata table, pure driver-side manifest JSON walks.
-    `files`/`history` call the SAME builders as the native
-    LakeTable.files()/history() (table.py), so the two surfaces cannot
-    diverge."""
+    """Rows for a metadata table, pure driver-side manifest walks.  Every
+    kind reads through the same builders as the native surface —
+    `files`/`history` through LakeTable.files()/history()'s row builders,
+    `refs` through LakeTable.refs(), `snapshots` through its ancestry
+    walk — so the two surfaces cannot diverge."""
     if kind == "files":
-        from .table import files_meta_rows
-
         return files_meta_rows(snap)
     if kind == "history":
-        from .table import history_meta_rows
-
         return history_meta_rows(snap)
     if kind == "refs":
-        rows = [("main", "branch", _read_ref_version(root, "main"))]
-        refs_dir = os.path.join(root, "_meta", "refs")
-        if os.path.isdir(refs_dir):
-            for fn in sorted(os.listdir(refs_dir)):
-                if not fn.endswith(".json") or fn.startswith("."):
-                    continue
-                with open(os.path.join(refs_dir, fn)) as fh:
-                    rec = json.load(fh)
-                rows.append(
-                    (fn[:-5], rec.get("type", "branch"), int(rec["version"]))
-                )
-        return rows
+        return [
+            (r["name"], r["type"], r["version"])
+            for r in LakeTable(None, root).refs()
+        ]
     if kind == "snapshots":
         rows = []
-        # resolve=True: n_files/physical_rows read the bucket inventory
-        for v, s in _ancestry(root, int(snap["version"]), resolve=True):
+        for v, s in LakeTable(None, root)._ancestry(int(snap["version"])):
+            # n_files/physical_rows read the bucket inventory
+            s = resolve_manifest(root, s)
             ledger = s.get("ledger", {})
             rows.append(
                 (
@@ -981,7 +919,8 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self):  # noqa: N802
-        head = _read_ref_version(self.root, self.ref)
+        t = LakeTable(None, self.root, ref=self.ref)
+        head = int(t._read_ref(self.ref)["version"])
         if not self.max_commits:
             return {"version": head}
         base = self._cursor if self._cursor is not None else self.start_version
@@ -991,21 +930,13 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         a, b = int(start["version"]), int(end["version"])
         self._cursor = max(a, b)
         parts: list[ChangePartition] = []
-        hit = a < 0
-        interval: list[tuple[int, dict]] = []
-        for v, s in _ancestry(self.root, b):
-            if v == a:
-                hit = True
-                break
-            if v < a:
-                break
-            interval.append((v, s))
-        if not hit:
+        interval = LakeTable(None, self.root, ref=self.ref)._interval(a, b)
+        if interval is None:
             raise ValueError(
                 f"laketable cdf: start version {a} is not in the retained "
                 f"ancestry of version {b} (expired or other branch)"
             )
-        for v, s in reversed(interval):
+        for v, s in interval:
             d = s.get("changes")
             if not d or d.get("mode") == "diff":
                 raise ValueError(

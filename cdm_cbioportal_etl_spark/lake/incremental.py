@@ -189,16 +189,14 @@ class IncrementalAggView:
             # advance the watermark with a metadata-only ledger commit so
             # the lookback horizon keeps up with snapshot expiry
             snap = json.loads(json.dumps(self.table.snapshot))
-            snap["version"] += 1
             snap["ledger"]["applied_lsn"] = to_v
             # watermark-only commit: no view row changed — and the copied
             # snapshot must not inherit the PREVIOUS commit's change
             # descriptor (stale "cdf" files would double-count)
-            snap["changes"] = {"mode": "none"}
-            snap["lineage"].append(
-                {"batch_id": f"view-advance-{to_v}", "source_version": to_v}
+            self.table._commit_op(
+                snap, {"mode": "none"}, "view_advance",
+                f"view-advance-{to_v}", source_version=to_v,
             )
-            self.table._commit(snap)
             return {"from_version": from_v, "to_version": to_v, "groups": 0}
         gkeys = list(self.group_cols)
         d = delta.select(

@@ -524,9 +524,7 @@ class LakeTable:
             os.close(dfd)
 
     def refresh(self) -> None:
-        version = self._read_ref(self.ref)["version"]
-        with open(os.path.join(self._meta_dir, f"snap-{version:08d}.json")) as fh:
-            self._snap = resolve_manifest(self.root, json.load(fh))
+        self._snap = self.snapshot_at(self._read_ref(self.ref)["version"])
 
     def _commit(self, snap: dict[str, Any]) -> None:
         """Write manifest then atomically swing the VERSION pointer.
@@ -671,13 +669,56 @@ class LakeTable:
             self._write_ref(self.ref, version, "branch")
         self._snap = snap
 
+    def _commit_op(
+        self,
+        snap: dict[str, Any],
+        changes: dict[str, Any],
+        operation: str,
+        batch_id: str | None = None,
+        **fields: Any,
+    ) -> None:
+        """Commit one mutation: ``snap`` with its change descriptor and
+        one lineage record (``at``, ``batch_id``, ``operation`` plus
+        ``fields``).  Lineage retention: the manifest must not grow
+        O(total commits ever) on a long-lived table, so only the newest
+        ``max_lineage`` records are kept (resume needs only the ledger
+        watermark; older lineage belongs in an external metrics sink).
+        Every mutation that records lineage commits through here."""
+        snap["changes"] = changes
+        lineage = [
+            *snap.get("lineage", []),
+            {
+                "at": round(time.time(), 3),
+                "batch_id": batch_id or uuid.uuid4().hex,
+                "operation": operation,
+                **fields,
+            },
+        ]
+        cap = int(snap.get("properties", {}).get("max_lineage", 5000))
+        snap["lineage"] = lineage[-cap:] if len(lineage) > cap else lineage
+        self._commit(snap)
+
+    @staticmethod
+    def _tag_segments(snap: dict[str, Any], segments: list[str]) -> None:
+        """Record applied WAL segment / stream epoch names in the ledger
+        — lets a streaming tail tell harmless redelivery apart from a
+        late or out-of-order segment (streaming/wal.py::_segment_guard),
+        committed atomically with the data they cover.  Retention is
+        CAPPED at ``max_tracked_segments`` (insertion-ordered, oldest
+        pruned) so manifests do not grow O(total segments ever):
+        redelivery of a segment older than the window then FAILS the
+        stale guard (fail-safe false positive) instead of being silently
+        re-merged — acceptable because redelivery that old means a
+        checkpoint loss an operator should see anyway."""
+        cap = int(snap.get("properties", {}).get("max_tracked_segments", 10_000))
+        prev = snap["ledger"].get("applied_segments", [])
+        seen = set(prev)
+        merged = list(prev) + [s for s in segments if s not in seen]
+        snap["ledger"]["applied_segments"] = merged[-cap:]
+
     def snapshot_at(self, version: int) -> dict[str, Any]:
         """Load a historical snapshot manifest (time travel)."""
-        path = os.path.join(self._meta_dir, f"snap-{version:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"no snapshot version {version} at {self.root}")
-        with open(path) as fh:
-            return resolve_manifest(self.root, json.load(fh))
+        return resolve_manifest(self.root, self._snapshot_raw(version))
 
     def _next_free_version(self) -> int:
         """Next unallocated number in the table's single global version
@@ -695,22 +736,40 @@ class LakeTable:
         return mx + 1
 
     def _ancestry(self, head: int | None = None):
-        """Yield versions newest-first along the ``parent`` chain from
-        ``head`` (default: this handle's current version).  Stops at the
-        root or at the first expired (missing) ancestor manifest.
-        Manifests written before the refs feature carry no ``parent``
-        key — fall back to numeric adjacency, their actual lineage."""
+        """Yield (version, raw snapshot) newest-first along the ``parent``
+        chain from ``head`` (default: this handle's current version).
+        Stops at the root or at the first expired (missing) ancestor
+        manifest.  Manifests written before the refs feature carry no
+        ``parent`` key — fall back to numeric adjacency, their actual
+        lineage."""
         v = self.snapshot["version"] if head is None else head
         while v is not None:
             try:
-                # raw load: the walk needs only `parent` — resolving a
-                # sharded inventory per ancestor would make every
-                # ancestry walk O(history × live files)
+                # raw load: walks read scalar fields (parent, committed_at,
+                # changes, schemas) — resolving a sharded inventory per
+                # ancestor would make every walk O(history × live files)
                 s = self._snapshot_raw(v)
             except ValueError:
                 return
-            yield v
+            yield v, s
             v = s.get("parent", v - 1 if v > 0 else None)
+
+    def _interval(
+        self, from_v: int, to_v: int
+    ) -> list[tuple[int, dict[str, Any]]] | None:
+        """The commits in ``(from_v, to_v]`` along ``to_v``'s ancestry,
+        oldest first, as (version, raw snapshot) pairs — the span a
+        change feed or a branch publish covers.  Numeric adjacency does
+        not hold once the global version sequence interleaves branch
+        commits, so the walk follows ``parent``.  None when ``from_v`` is
+        not a retained ancestor of ``to_v`` (expired or another branch);
+        a negative ``from_v`` means "from the oldest retained commit"."""
+        out = []
+        for v, s in self._ancestry(to_v):
+            if v <= from_v:  # parents are always numbered below children
+                return out[::-1] if v == from_v else None
+            out.append((v, s))
+        return out[::-1] if from_v < 0 else None
 
     def _snapshot_raw(self, version: int) -> dict[str, Any]:
         """Snapshot JSON WITHOUT shard resolution — for walks that read
@@ -732,10 +791,8 @@ class LakeTable:
         caveat — and version-based travel remains the exact API.  Raises
         if ts predates the oldest retained snapshot (the lookback
         horizon has passed it)."""
-        versions = list(self._ancestry())
         oldest = None
-        for v in versions:
-            s = self._snapshot_raw(v)  # only committed_at is needed
+        for v, s in self._ancestry():
             at = s.get("committed_at")
             if at is None or at <= ts:
                 return v  # pre-timestamp manifests count as old enough
@@ -843,7 +900,8 @@ class LakeTable:
         base = self.snapshot["version"]
         if src_head == base:
             return base  # nothing staged
-        if base not in self._ancestry(src_head):
+        staged = self._interval(base, src_head)
+        if staged is None:
             raise ConcurrentCommitError(
                 f"branch {branch!r} (head {src_head}) does not descend "
                 f"from {self.ref!r} (head {base}): the target advanced "
@@ -858,16 +916,11 @@ class LakeTable:
         # when they all captured CDF under one schema, else fall back to
         # the snapshot-diff mode — CDF consumers on the target ref keep
         # their fast path across a write-audit-publish cycle.
-        staged: list[int] = []
-        for v in self._ancestry(src_head):
-            if v == base:
-                break
-            staged.append(v)
         ch_files: list[str] = []
         ch_sid: int | None = None
         ch_ok = True
-        for v in reversed(staged):  # oldest-first
-            d = self.snapshot_at(v).get("changes") or {}
+        for _, s in staged:  # oldest-first
+            d = s.get("changes") or {}
             mode = d.get("mode")
             if mode == "none":
                 continue
@@ -882,24 +935,13 @@ class LakeTable:
                 break          # descriptor can't carry both
             ch_files.extend(d.get("files") or [])
         if ch_ok and ch_sid is not None:
-            snap["changes"] = {
-                "mode": "cdf", "files": ch_files, "schema_id": ch_sid,
-            }
-        elif ch_ok:
-            snap["changes"] = {"mode": "none"}
+            changes = {"mode": "cdf", "files": ch_files, "schema_id": ch_sid}
         else:
-            snap["changes"] = {"mode": "diff"}
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": f"publish-{branch}-{src_head}",
-                "operation": "publish",
-                "source_ref": branch,
-                "source_version": src_head,
-                "base_version": base,
-            }
+            changes = {"mode": "none" if ch_ok else "diff"}
+        self._commit_op(
+            snap, changes, "publish", f"publish-{branch}-{src_head}",
+            source_ref=branch, source_version=src_head, base_version=base,
         )
-        self._commit(snap)
         published = snap["version"]
         self._write_ref(branch, published, "branch")
         return published
@@ -1086,7 +1128,6 @@ class LakeTable:
         snap = json.loads(json.dumps(cur))
         sid = int(snap["schema_id"]) + 1
         snap["schema_id"] = sid
-        snap["version"] += 1
         snap["schemas"][str(sid)] = [
             {
                 "name": new if m["name"] == old else m["name"],
@@ -1098,16 +1139,11 @@ class LakeTable:
         ]
         snap["key_cols"] = [new if k == old else k for k in snap["key_cols"]]
         self._col_list_props_updated(snap, old, new)
-        snap["changes"] = {"mode": "none"}  # metadata-only: no row changed
-        snap["lineage"] = list(snap.get("lineage", [])) + [
-            {
-                "batch_id": f"rename-{uuid.uuid4().hex[:8]}",
-                "operation": "rename_column",
-                "column": old,
-                "to": new,
-            }
-        ]
-        self._commit(snap)
+        self._commit_op(
+            snap, {"mode": "none"},  # metadata-only: no row changed
+            "rename_column", f"rename-{uuid.uuid4().hex[:8]}",
+            column=old, to=new,
+        )
 
     def drop_column(self, name: str) -> None:
         """ALTER TABLE ... DROP COLUMN — metadata-only.  The field id is
@@ -1127,22 +1163,16 @@ class LakeTable:
         snap = json.loads(json.dumps(cur))
         sid = int(snap["schema_id"]) + 1
         snap["schema_id"] = sid
-        snap["version"] += 1
         snap["schemas"][str(sid)] = [
             {"name": m["name"], "type": m["type"], "id": m["id"], "pname": m["pname"]}
             for m in metas
             if m["name"] != name
         ]
         self._col_list_props_updated(snap, name, None)
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"] = list(snap.get("lineage", [])) + [
-            {
-                "batch_id": f"dropcol-{uuid.uuid4().hex[:8]}",
-                "operation": "drop_column",
-                "column": name,
-            }
-        ]
-        self._commit(snap)
+        self._commit_op(
+            snap, {"mode": "none"}, "drop_column",
+            f"dropcol-{uuid.uuid4().hex[:8]}", column=name,
+        )
 
     def evolve_schema(self, new_schema: T.StructType) -> bool:
         """ALTER TABLE: add columns / widen types.  Returns True if changed.
@@ -1172,11 +1202,9 @@ class LakeTable:
         if new == cur:
             return False
         annotated = self._annotated_schema_json(self.snapshot, new_schema)
-        snap = dict(self.snapshot)
-        snap["version"] = snap["version"] + 1
+        snap = json.loads(json.dumps(self.snapshot))
         sid = snap["schema_id"] + 1
         snap["schema_id"] = sid
-        snap = json.loads(json.dumps(snap))  # deep copy
         snap["schemas"][str(sid)] = annotated
         snap["changes"] = {"mode": "none"}  # metadata-only: no row changed
         self._commit(snap)
@@ -1947,7 +1975,6 @@ class LakeTable:
             "_bucket", self._bucket_expr()
         )
         mapping = self._write_bucket_files(staged, snap["schema_id"])
-        snap["version"] += 1
         snap["buckets"] = mapping
         snap.pop("dv", None)  # full replace: no prior positions survive
         snap.pop("eqdel", None)
@@ -3082,17 +3109,8 @@ class LakeTable:
         count_batch = batch_total >= 0
         rows_after = sum(res.bucket_rows.values())
         snap["bucket_rows"] = res.bucket_rows
-        # per-commit change descriptor: "cdf" (stored change files),
-        # "none" (structural commit, logically change-free), or "diff"
-        # (pre-images not captured — feed falls back to snapshot diff)
-        snap["changes"] = (
-            {"mode": "cdf", "files": res.change_files, "schema_id": snap["schema_id"]}
-            if res.change_files is not None
-            else {"mode": "diff"}
-        )
         if res.dv_entry:
             snap["dv"] = list(snap.get("dv", [])) + [res.dv_entry]
-        snap["version"] += 1
         snap["buckets"] = res.buckets_meta
         snap["ledger"]["applied_lsn"] = max(applied, int(agg["max_lsn"]))
         if source_watermarks:
@@ -3101,23 +3119,7 @@ class LakeTable:
                  for k, v in source_watermarks.items()}
             )
         if applied_segments:
-            # WAL segment names applied so far — lets the streaming tail
-            # tell harmless redelivery apart from a late/out-of-order
-            # segment (streaming/wal.py::_segment_guard); commits
-            # atomically with the data it covers.  Retention is CAPPED
-            # (insertion-ordered, oldest pruned) so a long-lived stream's
-            # manifests don't grow O(total segments ever): redelivery of
-            # a segment older than the window then FAILS the stale guard
-            # (fail-safe false positive) instead of being silently
-            # re-merged — acceptable because redelivery that old means a
-            # checkpoint loss an operator should see anyway.
-            max_keep = int(
-                snap.get("properties", {}).get("max_tracked_segments", 10_000)
-            )
-            prev = snap["ledger"].get("applied_segments", [])
-            seen = set(prev)
-            merged = list(prev) + [s for s in applied_segments if s not in seen]
-            snap["ledger"]["applied_segments"] = merged[-max_keep:]
+            self._tag_segments(snap, applied_segments)
         timings = {
             "gate_agg_sec": round(t_gate - t0, 3),
             # mode-agnostic: COW bucket rewrite or MOR delta append
@@ -3138,12 +3140,7 @@ class LakeTable:
             timings=timings,
             carried_files=res.carried_files,
         )
-        lineage = {
-            "at": round(time.time(), 3),
-            "batch_id": batch_id or uuid.uuid4().hex,
-            # explicit operation kind: history() must not infer it from a
-            # USER-supplied batch_id (e.g. 'compact-2026-08' is a merge)
-            "operation": "merge",
+        fields = {
             "lsn_max": int(agg["max_lsn"]),
             "batch_rows": stats.batch_rows,
             "batch_keys": stats.batch_keys,
@@ -3152,18 +3149,22 @@ class LakeTable:
             "skipped_already_applied": stats.skipped_already_applied,
             "carried_files": res.carried_files,
             "timings": timings,
+            **(extra_lineage or {}),
         }
-        if extra_lineage:
-            lineage.update(extra_lineage)
-        snap["lineage"].append(lineage)
-        # lineage retention: the manifest must not grow O(total merges
-        # ever) on a long-lived stream — keep the newest `max_lineage`
-        # records (resume needs only the ledger watermark, which is
-        # separate; older lineage belongs in an external metrics sink)
-        max_lineage = int(snap.get("properties", {}).get("max_lineage", 5000))
-        if len(snap["lineage"]) > max_lineage:
-            snap["lineage"] = snap["lineage"][-max_lineage:]
-        self._commit(snap)
+        self._commit_op(
+            snap,
+            # per-commit change descriptor: "cdf" (stored change files) or
+            # "diff" (pre-images not captured — the feed falls back to the
+            # snapshot diff)
+            {"mode": "cdf", "files": res.change_files, "schema_id": snap["schema_id"]}
+            if res.change_files is not None
+            else {"mode": "diff"},
+            # explicit operation kind: history() must not infer it from a
+            # USER-supplied batch_id (e.g. 'compact-2026-08' is a merge)
+            fields.pop("operation", "merge"),
+            fields.pop("batch_id", batch_id),
+            **fields,
+        )
         return stats
 
     # ------------------------------------------------------------------ #
@@ -3392,23 +3393,11 @@ class LakeTable:
         # scan node per SCHEMA VERSION, not per commit — a long interval
         # (thousands of commits) stays a handful-of-scans plan
         by_schema: dict[int, tuple[T.StructType, list[str]]] = {}
-        # the interval's commits = this ref's ancestry from to_v back to
-        # (exclusive) from_v — numeric adjacency doesn't hold once the
-        # global version sequence interleaves branch commits
-        interval: list[int] = []
-        hit_from = from_v < 0
-        for v in self._ancestry(to_v):
-            if v == from_v:
-                hit_from = True
-                break
-            if v < from_v:
-                break
-            interval.append(v)
-        if not hit_from:
+        interval = self._interval(from_v, to_v)
+        if interval is None:
             return None  # from_v expired or on another branch: fall back
         try:
-            for v in reversed(interval):
-                s = self.snapshot_at(v)
+            for _, s in interval:
                 d = s.get("changes")
                 if not d or d.get("mode") == "diff":
                     return None
@@ -3426,7 +3415,7 @@ class LakeTable:
                 by_schema[sid][1].extend(
                     os.path.join(self.root, p) for p in files
                 )
-        except (FileNotFoundError, KeyError, ValueError):
+        except (KeyError, ValueError):
             return None
         parts: list[DataFrame] = []
         ts = to_snap if to_snap is not None else self.snapshot
@@ -3681,17 +3670,11 @@ class LakeTable:
         except Exception:
             self.refresh()  # unstage
             raise
-        snap["version"] += 1
-        snap["changes"] = {"mode": "none"}  # metadata-only commit
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": f"add-constraint-{name}",
-                "operation": "add_constraint",
-                "constraint": {name: expr},
-            }
+        self._commit_op(
+            snap, {"mode": "none"},  # metadata-only commit
+            "add_constraint", f"add-constraint-{name}",
+            constraint={name: expr},
         )
-        self._commit(snap)
 
     def drop_constraint(self, name: str) -> None:
         cons = self._constraints()
@@ -3700,16 +3683,9 @@ class LakeTable:
         del cons[name]
         snap = json.loads(json.dumps(self.snapshot))
         snap["properties"]["check_constraints"] = json.dumps(cons)
-        snap["version"] += 1
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": f"drop-constraint-{name}",
-                "operation": "drop_constraint",
-            }
+        self._commit_op(
+            snap, {"mode": "none"}, "drop_constraint", f"drop-constraint-{name}"
         )
-        self._commit(snap)
 
     # properties an existing table cannot safely change: flipping
     # partial-image semantics re-interprets ALREADY-WRITTEN delta rows
@@ -3751,17 +3727,10 @@ class LakeTable:
         snap.setdefault("properties", {}).update(
             {str(k): str(v) for k, v in props.items()}
         )
-        snap["version"] += 1
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": "set-properties",
-                "operation": "set_properties",
-                "keys": sorted(str(k) for k in props),
-            }
+        self._commit_op(
+            snap, {"mode": "none"}, "set_properties", "set-properties",
+            keys=sorted(str(k) for k in props),
         )
-        self._commit(snap)
 
     def delete_where(self, cond) -> "MergeStats":
         """``DELETE FROM t WHERE cond`` as a COW/MOR merge: resolve the
@@ -3865,18 +3834,12 @@ class LakeTable:
                 }
             ]
             snap["ledger"]["applied_lsn"] = lsn
-            snap["version"] += 1
-            snap["lineage"].append(
-                {
-                    "batch_id": batch_id or f"delete_keys-{uuid.uuid4().hex[:8]}",
-                    "operation": "delete_keys",
-                    "lsn_max": lsn,
-                    "deleted_keys": n,
-                }
-            )
-            snap["changes"] = {"mode": "diff"}
             try:
-                self._commit(snap)
+                self._commit_op(
+                    snap, {"mode": "diff"}, "delete_keys",
+                    batch_id or f"delete_keys-{uuid.uuid4().hex[:8]}",
+                    lsn_max=lsn, deleted_keys=n,
+                )
                 return lsn
             except ConcurrentCommitError:
                 if attempt == retries:
@@ -4035,16 +3998,11 @@ class LakeTable:
         snap["bucket_rows"].update(
             {b: self._files_rows(f) for b, f in mapping.items()}
         )
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "batch_id": f"compact-{uuid.uuid4().hex[:8]}",
-                "operation": "compact",
-                "compacted_buckets": sorted(todo),
-            }
+        self._commit_op(
+            snap, {"mode": "none"},  # structural: same logical rows
+            "compact", f"compact-{uuid.uuid4().hex[:8]}",
+            compacted_buckets=sorted(todo),
         )
-        snap["changes"] = {"mode": "none"}  # structural: same logical rows
-        self._commit(snap)
         return len(todo)
 
     def _todo_rows(self, snap: dict, todo: set[int]) -> int:
@@ -4076,17 +4034,11 @@ class LakeTable:
             return cur["version"]
         old = self.snapshot_at(version)  # raises if expired
         snap = json.loads(json.dumps(old))
-        snap["version"] = cur["version"] + 1
-        snap["lineage"] = list(old.get("lineage", [])) + [
-            {
-                "batch_id": f"rollback-{uuid.uuid4().hex[:8]}",
-                "operation": "rollback",
-                "rolled_back_from": cur["version"],
-                "restored_version": version,
-            }
-        ]
-        snap["changes"] = {"mode": "diff"}  # state jump: diff is the feed
-        self._commit(snap)
+        self._commit_op(
+            snap, {"mode": "diff"},  # state jump: diff is the feed
+            "rollback", f"rollback-{uuid.uuid4().hex[:8]}",
+            rolled_back_from=cur["version"], restored_version=version,
+        )
         return snap["version"]
 
     def rebucket(self, n_buckets: int) -> int:
@@ -4131,16 +4083,10 @@ class LakeTable:
         snap["bucket_rows"] = {
             b: self._files_rows(f) for b, f in mapping.items()
         }
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "batch_id": f"rebucket-{uuid.uuid4().hex[:8]}",
-                "operation": "rebucket",
-                "n_buckets": n_buckets,
-            }
+        self._commit_op(
+            snap, {"mode": "none"},  # structural: same logical rows
+            "rebucket", f"rebucket-{uuid.uuid4().hex[:8]}", n_buckets=n_buckets,
         )
-        snap["changes"] = {"mode": "none"}  # structural: same logical rows
-        self._commit(snap)
         return snap["version"]
 
     # ------------------------------------------------------------------ #
@@ -4295,18 +4241,12 @@ class LakeTable:
         props["zorder_by"] = ",".join(cluster_by)
         props["zorder_bins"] = n_bins
         props["zorder_files_per_bucket"] = max(1, target_files_per_bucket)
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "batch_id": f"zorder-{uuid.uuid4().hex[:8]}",
-                "operation": "zorder",
-                "cluster_by": list(cluster_by),
-                "n_bins": n_bins,
-                "n_files": sum(len(f) for f in full.values()),
-            }
+        self._commit_op(
+            snap, {"mode": "none"},  # structural: same logical rows
+            "zorder", f"zorder-{uuid.uuid4().hex[:8]}",
+            cluster_by=list(cluster_by), n_bins=n_bins,
+            n_files=sum(len(f) for f in full.values()),
         )
-        snap["changes"] = {"mode": "none"}  # structural: same logical rows
-        self._commit(snap)
         return snap["version"]
 
     def files_admitted(
@@ -4398,7 +4338,7 @@ class LakeTable:
             if r["type"] == "tag":
                 protected.add(head)
                 continue
-            for i, v in enumerate(self._ancestry(head)):
+            for i, (v, _) in enumerate(self._ancestry(head)):
                 if i >= keep_last:
                     break
                 protected.add(v)
@@ -4593,7 +4533,10 @@ class LakeTable:
         )
         src_version = int(src_snap["version"])
         snap = json.loads(json.dumps(src_snap))
-        for key in ("version", "parent", "committed_at", "buckets_ref", "ref"):
+        # the clone's history starts at its own genesis
+        for key in (
+            "version", "parent", "committed_at", "buckets_ref", "ref", "lineage"
+        ):
             snap.pop(key, None)
         # absolutize every file reference against THIS table's root
         # (already-absolute entries — cloning a clone — pass through)
@@ -4603,23 +4546,16 @@ class LakeTable:
         for field in ("dv", "eqdel"):
             for e in snap.get(field, []):
                 e["files"] = [os.path.join(self.root, p) for p in e["files"]]
-        # the clone's feed starts at its genesis; the source's per-commit
-        # change descriptor must not masquerade as clone-commit-0 changes
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"] = [
-            {
-                "batch_id": f"clone-{uuid.uuid4().hex[:8]}",
-                "operation": "clone",
-                "source_root": self.root,
-                "source_version": src_version,
-                "mode": mode,
-            }
-        ]
         t = LakeTable(self.spark, dest_root)
         os.makedirs(t._data_dir, exist_ok=True)
         if mode == "deep":
             _localize_snap(snap, t.root)
-        t._commit(snap)
+        # the source's per-commit change descriptor must not masquerade
+        # as clone-commit-0 changes
+        t._commit_op(
+            snap, {"mode": "none"}, "clone", f"clone-{uuid.uuid4().hex[:8]}",
+            source_root=self.root, source_version=src_version, mode=mode,
+        )
         return t
 
     def localize(self) -> int:
@@ -4633,15 +4569,10 @@ class LakeTable:
         copied = _localize_snap(snap, self.root)
         if copied == 0:
             return 0
-        snap["changes"] = {"mode": "none"}  # metadata-only: no row changed
-        snap["lineage"] = list(snap.get("lineage", [])) + [
-            {
-                "batch_id": f"localize-{uuid.uuid4().hex[:8]}",
-                "operation": "localize",
-                "files_copied": copied,
-            }
-        ]
-        self._commit(snap)
+        self._commit_op(
+            snap, {"mode": "none"},  # metadata-only: no row changed
+            "localize", f"localize-{uuid.uuid4().hex[:8]}", files_copied=copied,
+        )
         return copied
 
     def drop(self) -> None:

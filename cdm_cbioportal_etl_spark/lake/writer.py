@@ -79,13 +79,6 @@ class DeltaAppendResult(WriterCommitMessage):
     max_lsn: int = -1
 
 
-def _meta_handle(root: str, ref: str) -> LakeTable:
-    """A SparkSession-free LakeTable handle: manifest reads and the
-    commit protocol are pure file I/O (only read()/write paths need the
-    session, and the writer never calls those)."""
-    return LakeTable(None, root, ref=ref)
-
-
 class LakeDeltaBatchWriter(DataSourceArrowWriter):
     """`df.write.format("laketable").option("path", ...).mode("append")`."""
 
@@ -97,16 +90,17 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
                 "for full rewrites"
             )
         self.root = os.path.abspath(str(options.get("path") or ""))
-        if not self.root or not os.path.isdir(
-            os.path.join(self.root, "_meta")
-        ):
+        if not LakeTable.exists(self.root):
             raise ValueError(
                 f"laketable writer: no table at {self.root!r} — create it "
                 "with LakeTable.create first (the writer appends, it does "
                 "not create)"
             )
         self.ref = str(options.get("ref", "main"))
-        t = _meta_handle(self.root, self.ref)
+        # SparkSession-free handle: manifest reads and the commit protocol
+        # are pure file I/O (the writer never calls read() or the
+        # Spark-side write paths)
+        t = LakeTable(None, self.root, ref=self.ref)
         snap = t.snapshot
         props = snap.get("properties", {})
         if str(props.get("partial_updates", "")).lower() == "true":
@@ -163,21 +157,11 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
 
     # -- executor side -------------------------------------------------- #
     def _fresh_watermark(self) -> int:
-        # raw snap JSON, NOT LakeTable.refresh: the task needs only the
+        # raw snapshot, NOT LakeTable.refresh: the task needs only the
         # ledger + layout ids — resolving a sharded manifest's full file
         # inventory here would cost O(live files) of JSON per task
-        if self.ref == "main":
-            with open(os.path.join(self.root, "_meta", "VERSION")) as fh:
-                version = int(fh.read().strip())
-        else:
-            with open(
-                os.path.join(self.root, "_meta", "refs", f"{self.ref}.json")
-            ) as fh:
-                version = int(json.load(fh)["version"])
-        with open(
-            os.path.join(self.root, "_meta", f"snap-{version:08d}.json")
-        ) as fh:
-            snap = json.load(fh)
+        t = LakeTable(None, self.root, ref=self.ref)
+        snap = t._snapshot_raw(t._read_ref(self.ref)["version"])
         if int(snap["n_buckets"]) != self.n_buckets or int(
             snap["schema_id"]
         ) != self.schema_id:
@@ -324,7 +308,7 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
             return {"rows": 0, "max_lsn": max_lsn, "buckets": 0}
         last_err: Exception | None = None
         for _ in range(4):  # optimistic-concurrency re-base
-            t = _meta_handle(self.root, self.ref)
+            t = LakeTable(None, self.root, ref=self.ref)
             snap = json.loads(json.dumps(t.snapshot))
             if segment and segment in snap["ledger"].get(
                 "applied_segments", []
@@ -352,42 +336,18 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
                 )
                 touched.add(int(b))
             snap["bucket_rows"] = bucket_rows
-            snap["changes"] = {"mode": "diff"}
             snap["ledger"]["applied_lsn"] = max(
                 int(snap["ledger"]["applied_lsn"]), max_lsn
             )
             if segment:
-                # the epoch tag commits atomically with the data it
-                # covers, capped like merge's applied_segments retention
-                max_keep = int(
-                    snap.get("properties", {}).get(
-                        "max_tracked_segments", 10_000
-                    )
-                )
-                seg = snap["ledger"].get("applied_segments", [])
-                if segment not in seg:
-                    seg = list(seg) + [segment]
-                snap["ledger"]["applied_segments"] = seg[-max_keep:]
-            import time as _time
-
-            snap["lineage"].append(
-                {
-                    "at": round(_time.time(), 3),
-                    "batch_id": batch_id,
-                    "operation": "merge",
-                    "lsn_max": max_lsn,
-                    "batch_rows": rows,
-                    "touched_buckets": sorted(touched),
-                    "writer": "datasource-delta-append",
-                }
-            )
-            max_lineage = int(
-                snap.get("properties", {}).get("max_lineage", 5000)
-            )
-            if len(snap["lineage"]) > max_lineage:
-                snap["lineage"] = snap["lineage"][-max_lineage:]
+                t._tag_segments(snap, [segment])
             try:
-                t._commit(snap)
+                t._commit_op(
+                    snap, {"mode": "diff"}, "merge", batch_id,
+                    lsn_max=max_lsn, batch_rows=rows,
+                    touched_buckets=sorted(touched),
+                    writer="datasource-delta-append",
+                )
                 return {
                     "rows": rows,
                     "max_lsn": max_lsn,

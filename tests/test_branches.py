@@ -164,6 +164,44 @@ def test_branch_commits_do_not_pollute_main_timestamp_travel(spark, tmp_path):
     assert {(r.k, r.v) for r in t.read(version=v).collect()} == _state(t)
 
 
+def test_datasource_timestamp_option_follows_ref(spark, tmp_path):
+    """``option("timestamp")`` resolves as ``version_at_timestamp`` does,
+    in the ancestry of ``option("ref")``; a timestamp older than every
+    retained snapshot raises."""
+    import time as _time
+
+    from cdm_cbioportal_etl_spark.lake.datasource import register
+
+    register(spark)
+    t = _mk(spark, tmp_path / "t")
+    _time.sleep(0.05)
+    ts = _time.time()
+    _time.sleep(0.05)
+    t.merge(_batch(spark, [(3, "c", 3)]))
+    t.create_branch("dev")
+    dev = t.checkout("dev")
+    dev.merge(_batch(spark, [(4, "d", 4)]))
+    _time.sleep(0.05)
+    ts_dev = _time.time()
+    _time.sleep(0.05)
+    t.merge(_batch(spark, [(5, "e", 5)]))
+
+    def rd(**opts):
+        r = spark.read.format("laketable").option("path", t.root)
+        for k, v in opts.items():
+            r = r.option(k, v)
+        return {(x.k, x.v) for x in r.load().collect()}
+
+    v = t.version_at_timestamp(ts)
+    old = {(r.k, r.v) for r in t.read(version=v).collect()}
+    assert rd(timestamp=str(ts)) == old == {(1, "a"), (2, "b")}
+    # main's ancestry never holds the branch commit; dev's does
+    assert rd(timestamp=str(ts_dev)) == {(1, "a"), (2, "b"), (3, "c")}
+    assert rd(timestamp=str(ts_dev), ref="dev") == _state(dev)
+    with pytest.raises(Exception, match="no retained snapshot"):
+        rd(timestamp="0")
+
+
 def test_expire_keeps_branch_and_tag_heads_alive(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     t.create_tag("old")

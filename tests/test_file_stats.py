@@ -444,3 +444,15 @@ def test_lineage_retention_cap(spark, tmp_path):
     assert lin[-1]["lsn_max"] == 6          # newest records survive
     assert t.applied_lsn() == 6             # ledger watermark untouched
     assert t.row_count() == 6
+    # metadata and maintenance commits keep the same cap
+    t.set_properties({"owner": "etl"})
+    t.add_constraint("v_nonneg", "v >= 0")
+    t.drop_constraint("v_nonneg")
+    assert t.compact(max_files_per_bucket=0) > 0
+    lin = t.snapshot["lineage"]
+    assert [r["operation"] for r in lin] == [
+        "add_constraint", "drop_constraint", "compact",
+    ]
+    # ...and each one commits onto its base: the parent chain is whole
+    head = t.snapshot["version"]
+    assert [v for v, _ in t._ancestry()] == list(range(head, -1, -1))

@@ -128,6 +128,22 @@ def test_structural_source_change_advances_watermark(spark, tmp_path):
     assert _consumed_and_rows(view)[1] == (("a", 1, 2),)
 
 
+def test_view_advance_reports_its_operation(spark, tmp_path):
+    """The watermark-only commit of a structural source interval shows in
+    the view's history() as ``view_advance``, not as a merge."""
+    src = _mk_source(spark, tmp_path, "src_adv", merge_mode="mor")
+    _merge(src, [(1, "upsert", "k1", "a", 1, 1.0)])
+    view = IncrementalAggView.create(
+        spark, str(tmp_path / "view_adv"), src, ["grp"], ["v"],
+    )
+    assert src.compact() > 0
+    view.refresh(src)
+    last = view.table.history().collect()[-1]
+    assert (last["operation"], last["batch_id"]) == (
+        "view_advance", f"view-advance-{src.snapshot['version']}",
+    )
+
+
 def test_null_group_values(spark, tmp_path):
     src = _mk_source(spark, tmp_path, "src_null")
     _merge(src, [(1, "upsert", "k1", None, 5, 1.0),
